@@ -182,13 +182,13 @@ final class StateAsOfRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // plans around it, so record here).
       store.readMix.recordTailScan(tablet)
       val rows = GraftBridge.ofRows(spark, child)
-      val rewritten = store.latestTabletSnapshot(tablet, h, ign) match {
-        case Some((snapH, snap)) =>
-          // Parquet-backed snapshot → bound the hydration scan (same as
-          // StateStore.readTabletAt; see readTabletAtWithSnapshot).
+      val rewritten = store.tabletSnapshotLookup(tablet, h, ign) match {
+        case Some(l) =>
+          // The lookup's hydration bound bounds the hydration scan (same
+          // as StateStore.readTabletAt; see readTabletAtWithSnapshot).
           graft.snapshot.Snapshots
-            .readTabletAtWithSnapshot(rows, snap, snapH, tablet, h, Nil,
-              graft.snapshot.Snapshots.hydrationBoundOf(snap))
+            .readTabletAtWithSnapshot(rows, l.rows, l.atHeight, tablet, h, Nil,
+              Some(l.hydrationBound))
         case None =>
           graft.read.TemporalReads.readTabletAt(rows, tablet, h)
       }

@@ -39,10 +39,19 @@ object TemporalReads {
 
   /** Tag speculative write sets (in block order) with ranks 1..n, union all.
     * Mirrors the ordered application of `speculativeWrites` (read.go:155–169).
-    */
+    *
+    * A PRE-RANKED frame — one that already carries `source_rank` — keeps
+    * its own ranks: that is how a whole reversible segment travels as ONE
+    * frame (rank = 1 + block index, see
+    * [[graft.streaming.IngestionPipeline.speculativeTabletRowsFor]])
+    * instead of one relation per block. Frames without the column are
+    * tagged with their position, as before; a caller mixing the two forms
+    * owns keeping the ranks apart. */
   def withSpeculative(rows: DataFrame, speculative: Seq[DataFrame]): DataFrame =
     speculative.zipWithIndex.foldLeft(durable(rows)) { case (acc, (spec, i)) =>
-      acc.unionByName(spec.withColumn(SourceRankCol, lit(i + 1)))
+      acc.unionByName(
+        if (spec.columns.contains(SourceRankCol)) spec
+        else spec.withColumn(SourceRankCol, lit(i + 1)))
     }
 
   /** Last-write-wins per key: argmax of (height, source_rank) per `keyCols`,

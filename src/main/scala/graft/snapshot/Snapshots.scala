@@ -109,13 +109,9 @@ object Snapshots {
       .filter(col("height") <= lit(snapshotHeight))
     val tail = scopedRows
       .filter(col("height") > lit(snapshotHeight) && col("height") <= lit(atHeight))
-    val base = TemporalReads.durable(hydrated.unionByName(tail))
-    val all = speculative.zipWithIndex.foldLeft(base) { case (acc, (spec, i)) =>
-      acc.unionByName(
-        spec
-          .filter(col("tablet_id") === lit(tabletId) && col("height") <= lit(atHeight))
-          .withColumn(TemporalReads.SourceRankCol, lit(i + 1)))
-    }
+    val all = TemporalReads.withSpeculative(hydrated.unionByName(tail),
+      speculative.map(_.filter(
+        col("tablet_id") === lit(tabletId) && col("height") <= lit(atHeight))))
     TemporalReads
       .latestPerKey(all, Seq("primary_key"), Seq("value"))
       .where(!col("is_deletion"))

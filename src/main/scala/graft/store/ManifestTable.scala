@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -322,9 +322,14 @@ final class ManifestTable(val tablePath: String, schema: StructType,
           attempt += 1
           Thread.sleep(10L << attempt)
         case Some(in) =>
+          // A checksummed file system (Hadoop's default local one) swaps
+          // the pointer and its `.crc` in two renames; a read between them
+          // fails its checksum. That is a torn read like any other: the
+          // empty text takes the bounded retry below.
           val text =
             try new String(
               org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
+            catch { case _: org.apache.hadoop.fs.ChecksumException => "" }
             finally in.close()
           // SELF-VALIDATING frame: `g2:<n>:<n>;` — the terminator proves
           // the read saw the whole object and the doubled value proves it
@@ -2049,18 +2054,15 @@ final class ManifestTable(val tablePath: String, schema: StructType,
 
   /** The table as of the current generation — only manifested files.
     *
-    * With `partitionCol` set the data files carry the column only in their
-    * `col=value/` directory names. Spark's partition parsing requires the
-    * `col=value` segments to sit DIRECTLY under `basePath` (a non-partition
-    * commit dir in between raises CONFLICTING_DIRECTORY_STRUCTURES), so
-    * each commit directory is scanned with itself as the base and the
-    * scans unioned: every branch still gets PartitionFilters, so a
-    * predicate on `partitionCol` prunes whole directories exactly like the
-    * rename-protocol layout. The union's width is the live commit count,
-    * which [[replaceAll]] (compaction) periodically collapses to one —
-    * same steady state as Iceberg/Delta manifest compaction. Partition
-    * parsing moves the column to the end of the schema — re-select
-    * restores the declared order. */
+    * One scan, whatever the number of live commits: [[scanOf]] plans the
+    * manifested files as a single file-source relation whose file index
+    * comes from the manifest itself. With `partitionCol` set the data
+    * files carry the column only in their `col=value/` directory names;
+    * the index takes each file's partition value from that path segment,
+    * so a predicate on `partitionCol` still prunes whole directories
+    * (PartitionFilters) exactly like the rename-protocol layout.
+    * Compaction ([[replaceAll]]) shrinks the FILE count, not the number
+    * of scans — there is only ever one. */
   def read(): DataFrame =
     currentGeneration().map(readAt).getOrElse(emptyDf)
 
@@ -2090,29 +2092,79 @@ final class ManifestTable(val tablePath: String, schema: StructType,
       val cur = currentGeneration().getOrElse(0L)
       require(gen <= cur, s"generation $gen does not exist (current: $cur)")
     }
-    scanOf(manifestEntries(gen).flatMap(_._2))
+    val entries = manifestEntriesFull(gen)
+    scanOf(entries.flatMap(_.files), sizesOf(entries))
   }
 
-  /** Build the union scan over an explicit relative-file list (the commit
-    * structure readAt documents: per-commit basePath so partition parsing
-    * sees `col=value` directly under each base). `private[graft]` so the
-    * changefeed source can scan exactly one commit's files. */
-  private[graft] def scanOf(rel: Seq[String]): DataFrame =
+  /** THE manifest scan: one file-source relation over an explicit
+    * relative-file list, planned without listing the store. The file
+    * index is built from the manifest — each file's status from its
+    * recorded byte size (`sizes`), served through a pre-filled status
+    * cache, and the partition spec from each file's `col=value` path
+    * segment — so planning makes no list or status call for a file whose
+    * size is known. A file missing from `sizes` (pre-bytes manifest
+    * entries, or a caller holding bare names) costs one status call.
+    * Every reader goes through here: [[readAt]], [[readPruned]], the
+    * merge's matched-file scan and the changefeed's per-commit scans. */
+  private[graft] def scanOf(rel: Seq[String],
+      sizes: Map[String, Long] = Map.empty): DataFrame =
     if (rel.isEmpty) emptyDf
-    else partitionCol match {
-      case None =>
-        spark.read.schema(schema).parquet(rel.map(f => s"$tablePath/$f"): _*)
-      case Some(_) =>
-        rel.groupBy(_.split("/", 2)(0)).toSeq.sortBy(_._1)
-          .map { case (commitDir, files) =>
-            spark.read
-              .option("basePath", s"$tablePath/$commitDir")
-              .schema(schema)
-              .parquet(files.map(f => s"$tablePath/$f"): _*)
-              .select(schema.fieldNames.map(
-                org.apache.spark.sql.functions.col).toSeq: _*)
-          }
-          .reduce(_ unionByName _)
+    else {
+      import org.apache.spark.sql.execution.datasources._
+      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      val (fs, root) = fsOf(tablePath)
+      val base = fs.makeQualified(root)
+      val statuses = rel.distinct.map { f =>
+        val p = new Path(base, f)
+        sizes.get(f) match {
+          case Some(len) =>
+            new FileStatus(len, false, 1, fs.getDefaultBlockSize(p), 0L, p)
+          case None => fs.getFileStatus(p)
+        }
+      }
+      // The files themselves are the index's root paths: an
+      // InMemoryFileIndex compares equal by its root-path set, and the
+      // cache manager and exchange reuse match scans through that
+      // equality — two scans over different files of one directory must
+      // never compare equal.
+      val byPath = statuses.map(st => st.getPath -> Array(st)).toMap
+      val dirs = statuses.map(_.getPath.getParent).distinct.sortBy(_.toString)
+      // Nullable, as every Spark file source reads: the files' own
+      // schema, not the declared one, decides whether a value is null.
+      val (partSchema, dataSchema) =
+        schema.map(_.copy(nullable = true))
+          .partition(f => partitionCol.contains(f.name)) match {
+          case (p, d) => (StructType(p), StructType(d))
+        }
+      val spec = partitionCol match {
+        case None => PartitionSpec.emptySpec
+        case Some(pc) =>
+          val dt = partSchema.head.dataType
+          PartitionSpec(partSchema, dirs.map { d =>
+            val raw = d.getName.stripPrefix(s"$pc=")
+            require(raw != d.getName,
+              s"manifested file under $d carries no $pc=<value> directory")
+            val v = ExternalCatalogUtils.unescapePathName(raw)
+            val value =
+              if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+              else org.apache.spark.sql.catalyst.expressions.Cast(
+                org.apache.spark.sql.catalyst.expressions.Literal(v), dt).eval()
+            PartitionPath(
+              org.apache.spark.sql.catalyst.InternalRow(value), d)
+          })
+      }
+      val cache = new FileStatusCache {
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+          byPath.get(path)
+        override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+      val index = new InMemoryFileIndex(spark, statuses.map(_.getPath),
+        Map.empty, Some(schema), cache, Some(spec))
+      val relation = HadoopFsRelation(index, partSchema, dataSchema,
+        None, new parquet.ParquetFileFormat, Map.empty)(spark)
+      spark.baseRelationToDataFrame(relation)
+        .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
     }
 
   /** DATA-SKIPPING read: the current generation restricted to files whose
@@ -2129,7 +2181,9 @@ final class ManifestTable(val tablePath: String, schema: StructType,
   def readPruned(filters: Seq[StatsFilter]): DataFrame =
     currentGeneration() match {
       case None => emptyDf
-      case Some(gen) => scanOf(survivingFiles(gen, filters))
+      case Some(gen) =>
+        val entries = manifestEntriesFull(gen)
+        scanOf(survivingFiles(entries, filters), sizesOf(entries))
     }
 
   /** (surviving, total) file counts for `filters` — the pruning
@@ -2138,12 +2192,13 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     currentGeneration() match {
       case None => (0, 0)
       case Some(gen) =>
-        val total = manifestEntriesFull(gen).map(_.files.size).sum
-        (survivingFiles(gen, filters).size, total)
+        val entries = manifestEntriesFull(gen)
+        (survivingFiles(entries, filters).size, entries.map(_.files.size).sum)
     }
 
-  private def survivingFiles(gen: Long, filters: Seq[StatsFilter]): Seq[String] =
-    manifestEntriesFull(gen).flatMap { e =>
+  private def survivingFiles(entries: Seq[ManifestEntry],
+      filters: Seq[StatsFilter]): Seq[String] =
+    entries.flatMap { e =>
       e.files.zip(e.stats).collect {
         case (f, st) if filters.forall(survives(st, _)) => f
       }
@@ -2522,9 +2577,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
   private def entriesWithout(entries: Seq[ManifestEntry],
       drop: Set[String]): Seq[ManifestEntry] =
     entries.map { e =>
-      val sizeOf: Map[String, Long] =
-        if (e.bytes.size == e.files.size) e.files.zip(e.bytes).toMap
-        else Map.empty
+      val sizeOf = sizesOf(Seq(e))
       val kept = e.files.zip(e.stats).filterNot { case (f, _) => drop.contains(f) }
       ManifestEntry(e.commitId, kept.map(_._1), kept.map(_._2),
         if (sizeOf.isEmpty) Nil else kept.map(p => sizeOf(p._1)))
@@ -2581,7 +2634,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     // Rewrite = LWW argmax over (matched files' rows ∪ updates); ties on
     // orderCol go to the updates side; winning tombstones drop the key.
     val cols = schema.fieldNames.toSeq
-    val existing = scanOf(matchedFiles).withColumn("__src", lit(0))
+    val existing = scanOf(matchedFiles, sizesOf(headEntries)).withColumn("__src", lit(0))
     val upd = updates.select(cols.map(col): _*).withColumn("__src", lit(1))
     // RANGE-partitioned on the keys, one output file per rewritten file:
     // a hash-partitioned (or AQE-coalesced) rewrite would give every
@@ -3210,6 +3263,13 @@ object ManifestTable {
 
   /** Higher-versioned owner-carrying frame (4 segments). */
   private[store] val NewerFrame4Re = """^g(\d+):(\d+):[0-9a-zA-Z-]+:(\d+);$""".r
+
+  /** Recorded byte size per relative file path — what [[scanOf]] builds
+    * file statuses from. Entries written before the manifest carried
+    * `bytes` contribute nothing (their files cost a status call). */
+  private[graft] def sizesOf(entries: Seq[ManifestEntry]): Map[String, Long] =
+    entries.iterator.filter(e => e.bytes.size == e.files.size)
+      .flatMap(e => e.files.iterator.zip(e.bytes.iterator)).toMap
 
   /** A fresh fencing nonce: one per own ATTEMPT (not per commitId — a
     * sibling replay of the same commit is a different attempt and must

@@ -609,7 +609,25 @@ final class StateStore(
   def latestTabletSnapshot(
       tabletId: String,
       maxHeight: Long = Long.MaxValue,
-      ignoreRange: Option[(Long, Long)] = None): Option[(Long, DataFrame)] = {
+      ignoreRange: Option[(Long, Long)] = None): Option[(Long, DataFrame)] =
+    tabletSnapshotLookup(tabletId, maxHeight, ignoreRange).map(l => l.atHeight -> l.rows)
+
+  /** THE snapshot-metadata statement: [[latestTabletSnapshot]]'s choice
+    * plus everything a snapshot-routed read needs to bound its scans —
+    * the snapshot's `min(height)` (the hydration bound, see
+    * [[graft.snapshot.Snapshots.hydrationBoundOf]]), its stored
+    * `squelch_count`, and, for a point read, `primaryKey`'s own height in
+    * it — all from ONE `groupBy(at_height)` over the tablet's snapshot
+    * rows. The newest usable `at_height` is picked on the driver from
+    * the per-snapshot groups (a handful per tablet after retention
+    * pruning), which is also where `ignoreRange`'s re-fetch below the
+    * window happens: the groups at or below its start are already in
+    * hand. None when no snapshot qualifies. */
+  private[graft] def tabletSnapshotLookup(
+      tabletId: String,
+      maxHeight: Long,
+      ignoreRange: Option[(Long, Long)] = None,
+      primaryKey: Option[String] = None): Option[StateStore.SnapshotLookup] = {
     val effectiveMax = ignoreRange match {
       case Some((start, stop)) if start < stop && maxHeight > start && maxHeight <= stop =>
         start
@@ -620,14 +638,25 @@ final class StateStore(
     }
     val scoped = tabletSnapshots
       .filter(col("tablet_id") === lit(tabletId) && col("at_height") <= lit(effectiveMax))
-    val heights = scoped.agg(max(col("at_height"))).collect()
-    Option(heights.head.get(0)).map(_.asInstanceOf[Long]).flatMap { h =>
-      if (inIgnore(h))
-        // The best snapshot lands inside the ignored window — re-fetch
-        // strictly below it (indexing.go:320–325's recursive re-fetch).
-        latestTabletSnapshot(tabletId, ignoreRange.get._1, ignoreRange)
-      else
-        Some(h -> scoped.filter(col("at_height") === lit(h)).select("primary_key", "height"))
+    val keyHeight = primaryKey.fold(lit(null).cast("long"))(k =>
+      when(col("primary_key") === lit(k), col("height")))
+    // One row per snapshot: (at_height, min height, squelch, key height).
+    val groups = scoped.groupBy(col("at_height"))
+      .agg(min(col("height")), max(col("squelch_count")), min(keyHeight))
+      .collect().toSeq
+    def newest(c: Seq[org.apache.spark.sql.Row]) =
+      if (c.isEmpty) None else Some(c.maxBy(_.getLong(0)))
+    newest(groups).flatMap { r =>
+      // The best snapshot lands inside the ignored window — re-fetch
+      // strictly below it (indexing.go:320–325's recursive re-fetch).
+      if (inIgnore(r.getLong(0))) newest(groups.filter(_.getLong(0) <= ignoreRange.get._1))
+      else Some(r)
+    }.map { r =>
+      val h = r.getLong(0)
+      def orMax(i: Int) = if (r.isNullAt(i)) Long.MaxValue else r.getLong(i)
+      StateStore.SnapshotLookup(h,
+        scoped.filter(col("at_height") === lit(h)).select("primary_key", "height"),
+        orMax(1), r.getLong(2), orMax(3))
     }
   }
 
@@ -637,12 +666,7 @@ final class StateStore(
   def latestTabletSnapshotMeta(
       tabletId: String,
       maxHeight: Long = Long.MaxValue): Option[(Long, Long, DataFrame)] =
-    latestTabletSnapshot(tabletId, maxHeight).map { case (h, idx) =>
-      val squelch = tabletSnapshots
-        .filter(col("tablet_id") === lit(tabletId) && col("at_height") === lit(h))
-        .agg(max(col("squelch_count"))).collect().head.getLong(0)
-      (h, squelch, idx)
-    }
+    tabletSnapshotLookup(tabletId, maxHeight).map(l => (l.atHeight, l.squelchCount, l.rows))
 
   /** Snapshot-aware as-of read: uses the newest snapshot at or below
     * `atHeight` so the mutation scan is bounded to the tail
@@ -656,13 +680,13 @@ final class StateStore(
       speculative: Seq[DataFrame] = Nil,
       ignoreRange: Option[(Long, Long)] = None): DataFrame = {
     readMix.recordTailScan(tabletId)
-    latestTabletSnapshot(tabletId, atHeight, ignoreRange) match {
-      case Some((snapH, snap)) =>
-        // The snapshot here is parquet-backed, so its min height is a tiny
-        // metadata-scale aggregate — worth running to bound the hydration
-        // scan (the difference between O(history) and O(live band) reads
-        // on a deep tablet; see readTabletAtWithSnapshot).
-        val hb = graft.snapshot.Snapshots.hydrationBoundOf(snap)
+    tabletSnapshotLookup(tabletId, atHeight, ignoreRange) match {
+      case Some(StateStore.SnapshotLookup(snapH, snap, bound, _, _)) =>
+        // The snapshot's min height comes with the lookup (same
+        // statement) and bounds the hydration scan — the difference
+        // between O(history) and O(live band) reads on a deep tablet;
+        // see readTabletAtWithSnapshot.
+        val hb = Some(bound)
         // Everything this read touches sits in heights
         // [min(hydration bound, snapH+1), atHeight] of this tablet —
         // manifest stats drop whole files outside that band before the
@@ -717,9 +741,9 @@ final class StateStore(
     val maxAt = Option(aggRow.get(0)).map(_.asInstanceOf[Long])
     val minAt = Option(aggRow.get(1)).map(_.asInstanceOf[Long])
     val nFallbackish = Option(aggRow.get(2)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    maxAt.flatMap(latestTabletSnapshot(tabletId, _, ignoreRange)) match {
-      case Some((snapH, snap)) =>
-        val hb = graft.snapshot.Snapshots.hydrationBoundOf(snap)
+    maxAt.flatMap(tabletSnapshotLookup(tabletId, _, ignoreRange)) match {
+      case Some(StateStore.SnapshotLookup(snapH, snap, bound, _, _)) =>
+        val hb = Some(bound)
         // ELIGIBLE route sources: everything it touches lies in
         // [min(hydration bound, snapH+1), maxAt] of this tablet — the
         // floor drops the deep history's FILES from the plan, the same
@@ -1366,8 +1390,8 @@ final class StateStore(
       atHeight: Long,
       speculative: Seq[DataFrame] = Nil): DataFrame = {
     readMix.recordPointRead(tabletId)
-    latestTabletSnapshot(tabletId, atHeight) match {
-      case Some((snapH, snap)) =>
+    tabletSnapshotLookup(tabletId, atHeight, primaryKey = Some(primaryKey)) match {
+      case Some(StateStore.SnapshotLookup(snapH, snap, _, _, keyBound)) =>
         // Snapshot route for the POINT read (read.go:240–260 consults the
         // index the same way): the key's snapshot entry pins its single
         // hydration height, so the scan is one row + the key's tail
@@ -1376,7 +1400,7 @@ final class StateStore(
         // snapH) hydrates nothing and resolves from the tail alone,
         // exactly like the full route.
         val keySnap = snap.filter(col("primary_key") === lit(primaryKey))
-        val keyH = graft.snapshot.Snapshots.hydrationBoundOf(keySnap)
+        val keyH = Some(keyBound)
         val src = tabletRowsPruned(Seq(
           ManifestTable.StatsEq("tablet_id", tabletId),
           ManifestTable.StatsEq("primary_key", primaryKey),
@@ -1504,6 +1528,14 @@ object StateStore {
   sealed trait CommitProtocol
   case object RenameCommit extends CommitProtocol
   case object ManifestCommit extends CommitProtocol
+
+  /** One [[StateStore.tabletSnapshotLookup]] answer: the chosen
+    * snapshot's height and `(primary_key, height)` rows, its
+    * `min(height)` (hydration bound; Long.MaxValue when empty), its
+    * stored squelch count, and the looked-up key's height in it
+    * (Long.MaxValue when the key is absent or none was asked for). */
+  final case class SnapshotLookup(atHeight: Long, rows: DataFrame,
+      hydrationBound: Long, squelchCount: Long, keyBound: Long)
 
   /** Age guard for the mutation-table compaction's INLINE orphan sweep.
     *

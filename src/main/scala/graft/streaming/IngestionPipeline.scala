@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model._
+import graft.read.TemporalReads
 import graft.store.StateStore
 
 /** A raw block as it arrives from the stream: payload plus fork metadata.
@@ -50,7 +51,13 @@ final class IngestionPipeline(
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** The fork tree, its LIB seeded from the store's durable checkpoint:
+    * after a restart (or a backfill handoff) the first `new` blocks link
+    * onto the block the store already holds, so they join the overlay
+    * instead of dangling off an unknown parent. */
   val forkDB = new ForkDB
+  store.checkpoint(StateStore.GlobalCheckpointKey).foreach(cp =>
+    forkDB.moveLIB(BlockRef(cp.blockId, cp.blockNum)))
 
   /** Index maintenance (write.go:64–69, indexing.go:32–98): per-tablet
     * mutation counters; tablets that cross the reference's heuristic get a
@@ -490,25 +497,44 @@ final class IngestionPipeline(
         .start()
     }
 
-  /** Speculative overlay for a read at block `refId`, as mutation DataFrames
-    * in block order — feeds TemporalReads' `speculative` argument
-    * (fluxdb.go:110–115). */
-  def speculativeTabletRows(refId: String): Option[Seq[DataFrame]] = {
-    import spark.implicits._
-    forkDB.speculativeWrites(refId).map(_.map { req =>
-      req.tabletRows.toDF(StateStore.tabletRowCols: _*)
-    })
-  }
+  /** Speculative overlay for a read at block `refId` — feeds
+    * TemporalReads' `speculative` argument (fluxdb.go:110–115). The whole
+    * reversible segment is ONE pre-ranked frame (see [[tabletOverlay]]);
+    * None when `refId` connects to no tracked branch. */
+  def speculativeTabletRows(refId: String): Option[Seq[DataFrame]] =
+    forkDB.speculativeWrites(refId).map(tabletOverlay)
 
   /** Singlet-entry speculative overlay for a read at block `refId` — feeds
     * the `speculative` argument of `readSingletEntryAt`/`readSingletEntries`
     * (read.go:333–345, 385–393), completing the facade pair with
     * [[speculativeTabletRows]]. */
-  def speculativeSingletEntries(refId: String): Option[Seq[DataFrame]] = {
+  def speculativeSingletEntries(refId: String): Option[Seq[DataFrame]] =
+    forkDB.speculativeWrites(refId).map(singletOverlay)
+
+  /** A reversible segment's tablet rows as ONE frame carrying
+    * `source_rank` = 1 + block index — the rank TemporalReads would tag
+    * block i's frame with — so a head read over N reversible blocks
+    * plans one local relation instead of N unioned ones. Empty segment
+    * (or one without tablet rows): no frame. */
+  private def tabletOverlay(ws: Seq[WriteRequest]): Seq[DataFrame] = {
     import spark.implicits._
-    forkDB.speculativeWrites(refId).map(_.map { req =>
-      req.singletEntries.toDF(StateStore.singletEntryCols: _*)
-    })
+    val rows = ws.zipWithIndex.flatMap { case (req, i) =>
+      req.tabletRows.map(r =>
+        (r.collection, r.tabletId, r.height, r.primaryKey, r.value, r.isDeletion, i + 1))
+    }
+    if (rows.isEmpty) Nil
+    else Seq(rows.toDF(StateStore.tabletRowCols :+ TemporalReads.SourceRankCol: _*))
+  }
+
+  /** [[tabletOverlay]]'s singlet twin. */
+  private def singletOverlay(ws: Seq[WriteRequest]): Seq[DataFrame] = {
+    import spark.implicits._
+    val rows = ws.zipWithIndex.flatMap { case (req, i) =>
+      req.singletEntries.map(e =>
+        (e.collection, e.singletId, e.height, e.value, e.isDeletion, i + 1))
+    }
+    if (rows.isEmpty) Nil
+    else Seq(rows.toDF(StateStore.singletEntryCols :+ TemporalReads.SourceRankCol: _*))
   }
 
   /** `FetchSpeculativeWrites` parity (pipeline.go:228–265): resolve an
@@ -518,25 +544,21 @@ final class IngestionPipeline(
   def fetchSpeculativeWrites(request: Option[BlockRef] = None): SpeculativeFetch =
     forkDB.fetchSpeculativeWrites(request)
 
-  /** [[fetchSpeculativeWrites]] resolved straight to tablet-row overlay
-    * frames (block order), with the reference's error outcomes raised as
+  /** [[fetchSpeculativeWrites]] resolved straight to the tablet-row
+    * overlay — one pre-ranked frame for the whole segment (see
+    * [[tabletOverlay]]) — with the reference's error outcomes raised as
     * exceptions — the shape the SQL branch-read TVF needs
     * (fluxdb.go:110–140: the server read resolves its block ref through
     * the fork tree before the KV read runs). */
-  def speculativeTabletRowsFor(request: Option[BlockRef]): Seq[DataFrame] = {
-    import spark.implicits._
-    overlayWritesFor(request).map(_.tabletRows.toDF(StateStore.tabletRowCols: _*))
-  }
+  def speculativeTabletRowsFor(request: Option[BlockRef]): Seq[DataFrame] =
+    tabletOverlay(overlayWritesFor(request))
 
-  /** [[speculativeTabletRowsFor]]'s SINGLET twin — the overlay frames a
+  /** [[speculativeTabletRowsFor]]'s SINGLET twin — the overlay frame a
     * fork-branch `readSingletEntryAt`/`readSingletEntries` wants
     * (read.go:300–349 point read, 356–408 speculative-first history),
     * with the same error outcomes. */
-  def speculativeSingletEntriesFor(request: Option[BlockRef]): Seq[DataFrame] = {
-    import spark.implicits._
-    overlayWritesFor(request).map(
-      _.singletEntries.toDF(StateStore.singletEntryCols: _*))
-  }
+  def speculativeSingletEntriesFor(request: Option[BlockRef]): Seq[DataFrame] =
+    singletOverlay(overlayWritesFor(request))
 
   /** Shared branch resolve for the two overlay shapes: the reference's
     * NotReady / RequestedBlockNotFound outcomes as loud errors. */

@@ -577,6 +577,9 @@ final class ManifestChangefeedSource(
           "onRewrite=emitFresh")
     }
     val appended = Seq.newBuilder[(Long, String, Seq[String])]
+    // Recorded file sizes from the sidecars: the scans below plan from
+    // them without a status call per file.
+    val sizes = Map.newBuilder[String, Long]
     // FAST PATH: per-generation delta sidecars, O(commit size) per
     // generation — what keeps a deep catch-up linear (the full-manifest
     // fold below parses O(live files) PER generation, quadratic over the
@@ -591,6 +594,7 @@ final class ManifestChangefeedSource(
       deltas.foreach {
         case (g, Some(rec)) =>
           val (cid, files) = (rec.entry.commitId, rec.entry.files)
+          sizes ++= ManifestTable.sizesOf(Seq(rec.entry))
           if (rec.rewrite && onRewrite == "emitFresh") rec.fresh match {
             // Per-file dataChange recorded at write: emit ONLY the files
             // carrying genuinely new rows (a merge's inserts), ride
@@ -640,12 +644,13 @@ final class ManifestChangefeedSource(
       }
     }
     val parts = appended.result()
+    val sizeOf = sizes.result()
     val batch =
       if (parts.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else ManifestChangefeed.balancedUnion(parts.map { case (g, cid, files) =>
-        table.scanOf(files)
+        table.scanOf(files, sizeOf)
           .withColumn(ManifestChangefeed.GenerationCol, lit(g))
           .withColumn(ManifestChangefeed.CommitIdCol, lit(cid))
       })
