@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale probe for MANIFEST-LEVEL data skipping (not part of the driver
-  * contract): builds a [[StateStore.ManifestCommit]] store with `commits`
+  * contract): builds a [[StateStore]] with `commits`
   * micro-batch commits (the accretion shape a 1 s trigger produces — one
   * committed directory per batch, disjoint height bands), then times the
   * flagship point reads through the store's manifest-pruned route vs the
@@ -45,7 +45,7 @@ object ManifestProbe {
     val root = s"/dev/shm/graft-mprobe/c$commits-t$tablets"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val store = new StateStore(root, StateStore.ManifestCommit)
+    val store = new StateStore(root)
 
     val rowsPerCommit = 200
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/tablet_rows/_gen"))) {
@@ -307,7 +307,7 @@ object ManifestProbe {
     {
       val fatRoot = s"/dev/shm/graft-mprobe-fat"
       fs.delete(new org.apache.hadoop.fs.Path(fatRoot), true)
-      val fatStore = new StateStore(fatRoot, StateStore.ManifestCommit)
+      val fatStore = new StateStore(fatRoot)
       def smallCommit(c: Int): Unit = fatStore.writeTabletRows(
         spark.range(rowsPerCommit).select(
           lit(1).as("collection"), lit("tabf").as("tablet_id"),
@@ -469,7 +469,7 @@ object ManifestProbe {
       import graft.streaming.StateMaterializer
       val liveRoot = s"/dev/shm/graft-mprobe-live"
       fs.delete(new org.apache.hadoop.fs.Path(liveRoot), true)
-      val liveStore = new StateStore(liveRoot, StateStore.ManifestCommit)
+      val liveStore = new StateStore(liveRoot)
       val matTarget = s"$liveRoot/serving"
       val t = StateMaterializer.targetTable(matTarget)
       // Pre-populate: the same 2M-key state, range-partitioned, stats on.

@@ -7,7 +7,7 @@ import graft.store.StateStore
 import graft.streaming.{IngestionPipeline, JoiningSource, LiveBlockSource, StateMaterializer, StreamedBlock}
 
 /** Sustained-ingestion SOAK at the reference's cadence — not a throughput
-  * sprint ([[BenchIngest]] is that) but the full serving loop held at its
+  * sprint (perfbench's `ingest_rows_per_s` is that) but the full serving loop held at its
   * design rate for tens of minutes, watching for drift that short gates
   * cannot show: steady-state commit→serve lag, manifest metadata growth
   * under `checkpointInterval = 8`, and driver heap.
@@ -67,7 +67,7 @@ object SoakIngest {
     val base = java.nio.file.Files.createTempDirectory("graft-soak").toString
     val root = s"$base/store"
     val target = s"$base/serving"
-    val store = new StateStore(root, StateStore.ManifestCommit)
+    val store = new StateStore(root)
     // Async index maintenance (round 15): snapshot builds leave the
     // commit path — the soak's residual ~10 s commit-lag sawtooth was the
     // per-batch build slot itself (PLANS.md round-14 run-4 table).
@@ -158,7 +158,7 @@ object SoakIngest {
     // use the minAge guard), and read staleness stays bounded. Reader
     // errors are counted and reported — the pass criterion is zero.
     val readerSpark = spark.newSession()
-    val readerStore = new StateStore(root, StateStore.ManifestCommit)(readerSpark)
+    val readerStore = new StateStore(root)(readerSpark)
     @volatile var stopReader = false
     val readerErrors = new java.util.concurrent.atomic.AtomicLong(0)
     val readerReads = new java.util.concurrent.atomic.AtomicLong(0)

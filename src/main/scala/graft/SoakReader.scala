@@ -31,7 +31,7 @@ object SoakReader {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val store = new StateStore(root, StateStore.ManifestCommit)
+    val store = new StateStore(root)
 
     var reads = 0L
     var errors = 0L

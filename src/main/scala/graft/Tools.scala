@@ -31,7 +31,7 @@ import graft.streaming.{BlockArchiveSource, IngestionPipeline}
   *   compact <root>                           fold per-batch dirs + checkpoint log
   *   checkpoint <root>                        print the live global checkpoint
   *   read-tablet <root> <tablet> <height>     snapshot-aware as-of read
-  *   table-generations <root>                 manifest-protocol commit history
+  *   table-generations <root>                 tablet-row table commit history
   *   head-check <root|tablePath> [--history]  fencing-metadata cross-check
   *                                            (pointer owner vs head sidecar)
   *                                            for a store root or one table;
@@ -45,16 +45,9 @@ import graft.streaming.{BlockArchiveSource, IngestionPipeline}
   */
 object Tools {
 
-  /** Open `root` under the protocol its on-disk layout declares: a
-    * `_gen` generation pointer under tablet_rows marks a manifest-protocol
-    * store; anything else is the rename protocol. Lets every verb work on
-    * either store without a flag. */
-  private def storeFor(root: String)(implicit spark: SparkSession): StateStore =
-    new StateStore(root, StateStore.detectProtocol(root))
-
   def run(args: Seq[String])(implicit spark: SparkSession): String = args.toList match {
     case "inject" :: root :: archive :: ckpt :: Nil =>
-      val pipeline = new IngestionPipeline(storeFor(root))
+      val pipeline = new IngestionPipeline(new StateStore(root))
       val q = pipeline.start(BlockArchiveSource.readStream(spark, archive), ckpt)
       q.processAllAvailable()
       q.stop()
@@ -63,7 +56,7 @@ object Tools {
       Backfill.run(spark.read.parquet(mutations), out, n.toInt)
       s"sharded $mutations into $n shards at $out"
     case "inject-shard" :: shardPath :: i :: root :: Nil =>
-      Backfill.injectShard(spark, shardPath, i.toInt, storeFor(root))
+      Backfill.injectShard(spark, shardPath, i.toInt, new StateStore(root))
       s"injected shard $i"
     case "inject-dbin" :: segment :: i :: root :: widths :: rest if rest.size <= 1 =>
       // widths: the embedder's collection→identifier-width registry,
@@ -72,25 +65,25 @@ object Tools {
         val Array(c, l) = kv.split('=')
         (java.lang.Integer.decode(c.trim).intValue, l.trim.toInt)
       }.toMap
-      val n = Backfill.injectDbinSegment(spark, segment, i.toInt, storeFor(root),
+      val n = Backfill.injectDbinSegment(spark, segment, i.toInt, new StateStore(root),
         idLen, rest.headOption.map(_.toLong).getOrElse(-1L))
       s"injected $n write requests from $segment as shard $i"
     case "layout-report" :: root :: Nil =>
-      val rows = storeFor(root).compactTabletRowsAutoReport()
+      val rows = new StateStore(root).compactTabletRowsAutoReport()
       if (rows.isEmpty) "no observed tablets (no reads recorded yet)"
       else rows.map { case (t, p, s, d) =>
         s"$t: points=$p scans=$s -> $d" }.mkString("\n")
     case "backfill-sidecars" :: root :: Nil =>
-      storeFor(root).backfillDeltaSidecars()
+      new StateStore(root).backfillDeltaSidecars()
         .map { case (t, (synth, present)) =>
           s"$t: synthesized $synth sidecar(s), $present already present" }
         .mkString("\n")
     case "shard-status" :: root :: n :: Nil =>
-      storeFor(root).verifyAllShardsWritten(n.toInt).collect()
+      new StateStore(root).verifyAllShardsWritten(n.toInt).collect()
         .map(r => s"${r.getString(0)} height=${r.get(1)} ${r.getString(2)}")
         .mkString("\n")
     case "finalize-sharding" :: root :: n :: Nil =>
-      val cp = storeFor(root).finalizeSharding(n.toInt)
+      val cp = new StateStore(root).finalizeSharding(n.toInt)
       s"finalized at height ${cp.height} (block ${cp.blockId})"
     case "reindex" :: root :: rest =>
       val dry = rest.contains("dryRun")
@@ -98,34 +91,34 @@ object Tools {
       val maxH = pos.headOption.map(_.toLong).getOrElse(Long.MaxValue)
       val lower = pos.drop(1).headOption.getOrElse("")
       val (tablets, entries) =
-        storeFor(root).reindexTablets(maxH, lower, dryRun = dry)
+        new StateStore(root).reindexTablets(maxH, lower, dryRun = dry)
       s"${if (dry) "would reindex" else "reindexed"} $entries entries across $tablets tablets"
     case "reindex-tablet" :: root :: tablet :: Nil =>
-      storeFor(root).reindexTablet(tablet)
+      new StateStore(root).reindexTablet(tablet)
         .map(h => s"reindexed $tablet at height $h")
         .getOrElse("re-index not required")
     case "prune" :: root :: tablet :: freq :: Nil =>
-      val kept = storeFor(root).pruneTabletSnapshots(tablet, freq.toInt)
+      val kept = new StateStore(root).pruneTabletSnapshots(tablet, freq.toInt)
       s"kept snapshot heights ${kept.mkString(",")}"
     case "compact" :: root :: Nil =>
-      val store = storeFor(root)
+      val store = new StateStore(root)
       val t = store.compactTabletRows()
       val e = store.compactSingletEntries()
       store.compactCheckpoints()
       s"compacted $t tablet-row and $e singlet-entry batch dirs; checkpoint log folded"
     case "checkpoint" :: root :: Nil =>
-      storeFor(root).checkpoint(StateStore.GlobalCheckpointKey)
+      new StateStore(root).checkpoint(StateStore.GlobalCheckpointKey)
         .map(cp => s"checkpoint height=${cp.height} block=${cp.blockId}")
         .getOrElse("no checkpoint")
     case "read-tablet" :: root :: tablet :: height :: Nil =>
       // The server mode's flagship read (read.go:35–178), snapshot-aware.
-      storeFor(root).readTabletAt(tablet, height.toLong).collect()
+      new StateStore(root).readTabletAt(tablet, height.toLong).collect()
         .map(r => s"${r.getString(0)} h=${r.getLong(1)} " +
           new String(r.getAs[Array[Byte]](2), "UTF-8"))
         .mkString("\n")
     case "table-generations" :: root :: Nil =>
-      // Manifest-protocol commit history (one line per generation).
-      val store = new StateStore(root, StateStore.ManifestCommit)
+      // The tablet-row table's commit history (one line per generation).
+      val store = new StateStore(root)
       val mt = store.manifestTableFor(store.tabletRowsPath)
       mt.currentGeneration() match {
         case None => "empty table (no generation pointer)"
@@ -159,33 +152,27 @@ object Tools {
       val genAt = new org.apache.hadoop.fs.Path(s"$root/_gen")
       val isBareTable =
         genAt.getFileSystem(spark.sessionState.newHadoopConf()).exists(genAt)
-      if (!isBareTable &&
-          StateStore.detectProtocol(root) == StateStore.RenameCommit)
-        "nothing to check: rename-protocol store (no generation pointer — " +
-          "single-writer rename commits carry no fencing metadata)"
-      else {
-        val (problems, audit) =
-          if (isBareTable) {
-            val t = graft.streaming.StateMaterializer.targetTable(root)
-            (t.verifyHead().toSeq,
-              if (history) t.auditHistory() else Seq.empty)
-          } else {
-            val s = new StateStore(root, StateStore.ManifestCommit)
-            (s.verifyHeads(), if (history) s.auditHistories() else Seq.empty)
-          }
-        val headLine =
-          if (problems.isEmpty) "head check clean"
-          else problems.mkString("HEAD CHECK FAILED:\n", "\n", "")
-        if (!history) headLine
-        else if (audit.isEmpty) s"$headLine\nhistory audit clean"
-        else s"$headLine\nHISTORY AUDIT (${audit.size} finding(s)):\n" +
-          audit.mkString("\n")
-      }
+      val (problems, audit) =
+        if (isBareTable) {
+          val t = graft.streaming.StateMaterializer.targetTable(root)
+          (t.verifyHead().toSeq,
+            if (history) t.auditHistory() else Seq.empty)
+        } else {
+          val s = new StateStore(root)
+          (s.verifyHeads(), if (history) s.auditHistories() else Seq.empty)
+        }
+      val headLine =
+        if (problems.isEmpty) "head check clean"
+        else problems.mkString("HEAD CHECK FAILED:\n", "\n", "")
+      if (!history) headLine
+      else if (audit.isEmpty) s"$headLine\nhistory audit clean"
+      else s"$headLine\nHISTORY AUDIT (${audit.size} finding(s)):\n" +
+        audit.mkString("\n")
     case "read-tablet-at-gen" :: root :: gen :: tablet :: height :: Nil =>
       // TIME-TRAVEL as-of read: the flagship read over the mutation table
       // exactly as of manifest generation `gen` (readable while the
       // generation is inside the sweep retention window).
-      val store = new StateStore(root, StateStore.ManifestCommit)
+      val store = new StateStore(root)
       val rows = store.manifestTableFor(store.tabletRowsPath).readAt(gen.toLong)
       graft.read.TemporalReads.readTabletAt(rows, tablet, height.toLong).collect()
         .map(r => s"${r.getString(0)} h=${r.getLong(1)} " +
@@ -194,7 +181,7 @@ object Tools {
     case "diff" :: root :: tablet :: from :: to :: Nil =>
       // The changefeed diff read: per-key added/updated/deleted between
       // two heights (the store's incremental plan).
-      storeFor(root).readTabletDiff(tablet, from.toLong, to.toLong).collect()
+      new StateStore(root).readTabletDiff(tablet, from.toLong, to.toLong).collect()
         .map { r =>
           def v(i: Int) = Option(r.getAs[Array[Byte]](i))
             .map(new String(_, "UTF-8")).getOrElse("-")
@@ -207,7 +194,7 @@ object Tools {
       // checkpoint resumes exactly where it left off. A daemon deployment
       // calls StateMaterializer.start and keeps the query running.
       val q = graft.streaming.StateMaterializer.start(
-        storeFor(root), target, ckpt)
+        new StateStore(root), target, ckpt)
       q.processAllAvailable()
       q.stop()
       val n = graft.streaming.StateMaterializer.read(target)(spark).count()

@@ -145,14 +145,7 @@ object GraftExtensions {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.StateStore]()
 
   private[graft] def storeFor(root: String): graft.store.StateStore =
-    stores.computeIfAbsent(root, { r =>
-      implicit val s: SparkSession = SparkSession.active
-      // Protocol AUTO-DETECTION: the TVF takes a bare root, and opening a
-      // manifest-protocol store under the rename default would scan raw
-      // d-* attempt dirs (crashed uncommitted attempts, unswept
-      // generations) — silently wrong results, not an error.
-      new graft.store.StateStore(r, graft.store.StateStore.detectProtocol(r))
-    })
+    stores.computeIfAbsent(root, r => new graft.store.StateStore(r)(SparkSession.active))
 
   /** Live ingestion pipelines by store root: the handle through which the
     * SQL surface reaches DRIVER-SIDE fork state (the ForkDB's speculative

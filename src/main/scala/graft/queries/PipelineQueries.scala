@@ -50,27 +50,32 @@ object PipelineQueries {
     * Spark job just to build the query object, which breaks lazy
     * construction for every explain/plan-capture caller. The same number
     * a manifest-backed table serves from its stats — here the footer IS
-    * the manifest. Memoized per path: the bench corpora are immutable by
-    * contract (deterministic inputs, read-only mount). */
-  private val parquetCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    * the manifest. Memoized per path and file signature (every leaf's
+    * name, length and modification time): a repeat call pays one listing,
+    * and a path whose files changed is counted again. */
+  private val parquetCountMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long, Long)], Long)]()
 
-  private[graft] def parquetRowCount(s: SparkSession, path: String): Long =
-    parquetCountMemo.computeIfAbsent(path, _ => {
-      val conf = s.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
-      def leafFiles(st: org.apache.hadoop.fs.FileStatus)
-          : Seq[org.apache.hadoop.fs.FileStatus] =
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leafFiles)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-        else Seq.empty
-      leafFiles(fs.getFileStatus(root)).map { f =>
+  private[graft] def parquetRowCount(s: SparkSession, path: String): Long = {
+    val conf = s.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    def leafFiles(st: org.apache.hadoop.fs.FileStatus)
+        : Seq[org.apache.hadoop.fs.FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leafFiles)
+      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+      else Seq.empty
+    val leaves = leafFiles(fs.getFileStatus(root))
+    val signature = leaves
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    parquetCountMemo.compute(path, (_, memo) =>
+      if (memo != null && memo._1 == signature) memo
+      else (signature, leaves.map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
-      }.sum
-    })
+      }.sum))._2
+  }
 
   // ---------------------------------------------------------------- hashing
 

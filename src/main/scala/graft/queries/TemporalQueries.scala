@@ -285,7 +285,7 @@ object TemporalQueries {
       }) { (s, dir) =>
       import org.apache.spark.sql.types._
       val root = java.nio.file.Files.createTempDirectory("graft-cf-gate").toString
-      val store = new graft.store.StateStore(root, graft.store.StateStore.ManifestCommit)(s)
+      val store = new graft.store.StateStore(root)(s)
       val m = mutations(s, dir).filter(col("tablet_id") === "error")
       val sink = "cf_gate_" + java.util.UUID.randomUUID().toString.replace("-", "")
       // State-store width for THIS streaming query only: the session's 32
@@ -340,7 +340,7 @@ object TemporalQueries {
       implicit val is = s
       val root = java.nio.file.Files.createTempDirectory("graft-mat-gate").toString
       val target = java.nio.file.Files.createTempDirectory("graft-mat-target").toString
-      val store = new graft.store.StateStore(root, graft.store.StateStore.ManifestCommit)(s)
+      val store = new graft.store.StateStore(root)(s)
       val m = mutations(s, dir).filter(col("tablet_id") === "view")
       Seq((-1L, 2000L), (2000L, 4000L), (4000L, 6000L)).zipWithIndex.foreach {
         case ((lo, hi), i) =>

@@ -169,8 +169,7 @@ object Snapshots {
       // null probes); defaults to `rows`. The store passes a separately
       // bounded scan here — and an empty relation when it has PROVED the
       // fallback probe set is empty, so the plan never lists the deep
-      // history's files at all (the asymmetry that matters under the
-      // manifest protocol, where the eligible route's file list is floored
+      // history's files at all (the eligible route's file list is floored
       // at the hydration bound but a shared source would drag every
       // pre-snapshot file into the union anyway).
       fallbackRows: Option[DataFrame] = None): DataFrame = {

@@ -4,9 +4,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Object-store-safe commit protocol for one table (the manifest-pointer
-  * alternative to [[StateStore]]'s staged-rename protocol — reference
-  * equivalent: the transactional KV batch, store/kv/store.go:332–467).
+/** Object-store-safe commit protocol for one table — the commit, read,
+  * compaction and changefeed path of [[StateStore]]'s mutation tables
+  * (reference equivalent: the transactional KV batch,
+  * store/kv/store.go:332–467).
   *
   * S3-class stores have no atomic directory rename, so "stage then rename
   * into place" cannot be the visibility barrier. Here data files are
@@ -2060,7 +2061,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     * files carry the column only in their `col=value/` directory names;
     * the index takes each file's partition value from that path segment,
     * so a predicate on `partitionCol` still prunes whole directories
-    * (PartitionFilters) exactly like the rename-protocol layout.
+    * (PartitionFilters).
     * Compaction ([[replaceAll]]) shrinks the FILE count, not the number
     * of scans — there is only ever one. */
   def read(): DataFrame =

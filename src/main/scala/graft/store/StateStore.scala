@@ -8,48 +8,49 @@ import graft.model._
 
 /** Durable storage layout + batch writer (reference write.go, store/kv).
   *
-  * Layout (SURVEY.md §1.4): append-only Parquet tables under a root —
-  *   tablet_rows/      hive-partitioned by `collection=N`, one COMMITTED
-  *                     sub-directory per batch below the partition dir,
-  *                     sorted within files by (tablet_id, height). A
-  *                     collection predicate prunes whole directories
-  *                     (PartitionFilters); tablet/height predicates prune
-  *                     via min/max row-group stats.
-  *   singlet_entries/  same.
+  * Layout (SURVEY.md §1.4): Parquet tables under a root —
+  *   tablet_rows/      the tablet-row mutation table, one [[ManifestTable]]:
+  *                     hive-partitioned by `collection=N` (a collection
+  *                     predicate prunes whole directories), files sorted
+  *                     by (tablet_id, height), per-file stats in the
+  *                     manifest so tablet/height predicates prune files.
+  *   singlet_entries/  same, for singlet entries.
   *   checkpoints/      tiny commit log; the LAST durably-visible write of a
   *                     batch, mirroring the reference's checkpoint-key-last
   *                     flush ordering (store/kv/store.go:418–450). Compacted
-  *                     to latest-per-key once the dir count grows.
+  *                     to latest-per-key once the file count grows.
   *   tablet_snapshots/ TabletIndex log (indexing.go).
   *
   * Commit protocol — the Spark stand-in for the reference KV store's atomic
   * batch flush (store/kv/store.go:332–467):
-  *   1. every append is STAGED under `_staging/<uuid>` (invisible: readers
-  *      list only the table directories, and `_`-prefixed paths are hidden
-  *      to Spark file listings anyway);
-  *   2. the staged directory is atomically RENAMED into the table under a
-  *      deterministic name (`b<from>-<to>` for a batch) — readers therefore
-  *      never observe a partially-written batch;
-  *   3. the checkpoint row is written strictly LAST (write.go:40–72), so a
+  *   1. the batch's mutation rows commit through [[ManifestTable]]: data
+  *      files are written once and never renamed; they become visible at
+  *      one generation-pointer swap (a single small-object PUT), so readers
+  *      never observe a partially-written batch, on HDFS, local disk and
+  *      S3-class object stores alike;
+  *   2. the checkpoint row is written strictly LAST (write.go:40–72), so a
   *      crash never leaves the checkpoint ahead of the data.
-  * Replay after a crash between (2) and (3) is idempotent: the linearity
+  * Replay after a crash between (1) and (2) is idempotent: the linearity
   * guard re-admits the batch (checkpoint unchanged), and the deterministic
-  * directory name makes the data write a no-op skip, so rows are never
-  * duplicated (the reference gets the same from KV overwrite semantics).
+  * commit id (`b<from>-<to>` for a batch) makes the data commit a no-op
+  * skip, so rows are never duplicated (the reference gets the same from KV
+  * overwrite semantics).
+  *
+  * Staged rename is only the checkpoint log's and the snapshot table's
+  * commit: an append is written under `_staging/<uuid>` (invisible to
+  * readers) and renamed into the table under a deterministic name, and a
+  * whole-table rewrite (checkpoint compaction, reindex) is the crash-safe
+  * swap of [[rewriteTable]] / [[recoverSwap]].
   *
   * All filesystem operations go through Hadoop's FileSystem API, so the
-  * store works unchanged against hdfs:// or s3a:// roots. The staged-
-  * rename protocol above needs atomic DIRECTORY rename (HDFS/local);
-  * for S3-class object stores construct the store with
-  * `commitProtocol = StateStore.ManifestCommit`: the mutation tables then
-  * commit via [[ManifestTable]] — data files written once and never
-  * renamed, visibility from a manifest plus a single generation-pointer
-  * swap (one small-object PUT), readers listing from the manifest.
+  * store works unchanged against hdfs:// or s3a:// roots.
   */
 final class StateStore(
     val root: String,
-    val commitProtocol: StateStore.CommitProtocol = StateStore.RenameCommit,
-    // Manifest-protocol metadata amortization: full manifest every Nth
+    // Names the mutation tables' one commit protocol; selects nothing
+    // (see [[StateStore.CommitProtocol]]).
+    commitProtocol: StateStore.CommitProtocol = StateStore.ManifestCommit,
+    // Manifest metadata amortization: full manifest every Nth
     // generation, delta sidecars between (ManifestTable.checkpointInterval
     // — the Delta _last_checkpoint shape). 8 keeps the worst-case read
     // reconstruction at 7 tiny sidecar reads while cutting the appender's
@@ -91,8 +92,7 @@ final class StateStore(
   // and again at the head of every [[rewriteTable]]. Readers never rename —
   // a reader racing a live rewrite between its two renames could otherwise
   // restore `path.old` over the writer's about-to-promote replacement.
-  Seq(tabletRowsPath, singletEntriesPath, checkpointsPath, snapshotsPath)
-    .foreach(recoverSwap)
+  Seq(checkpointsPath, snapshotsPath).foreach(recoverSwap)
 
   // ------------------------------------------------------------------
   // Filesystem plumbing (Hadoop FS — never java.io.File, which silently
@@ -139,49 +139,20 @@ final class StateStore(
     }
   }
 
-  /** [[atomicAppend]] for the collection-partitioned mutation tables
-    * (SURVEY §1.4 "partition by collection"): the staged write is
-    * `partitionBy("collection")`, and each `collection=N` directory is
-    * promoted to `tablePath/collection=N/dirName` — so a collection
-    * predicate prunes whole DIRECTORIES at the file-index level
-    * (PartitionFilters), not just row groups. One rename per collection in
-    * the batch; a crash between renames is covered by checkpoint-last plus
-    * the per-collection deterministic-name skip on replay. */
-  private def atomicAppendPartitioned(
-      df: DataFrame, tablePath: String, dirName: String): Boolean = {
-    val staging = s"$stagingRoot/${java.util.UUID.randomUUID().toString}"
-    df.write.mode(SaveMode.Overwrite).partitionBy("collection").parquet(staging)
-    val (fs, sp) = fsPath(staging)
-    val parts = fs.listStatus(sp).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("collection="))
-      .sortBy(_.getName)
-    var any = false
-    parts.foreach { p =>
-      val collDir = s"$tablePath/${p.getName}"
-      val target = s"$collDir/$dirName"
-      if (!pathExists(target)) {
-        fs.mkdirs(new Path(collDir))
-        renamePath(p.toString, target)
-        any = true
-      }
-    }
-    deletePathQuiet(staging)
-    any
-  }
-
-  /** Swap-rewrite a whole table (compaction / prune): write the replacement,
-    * move the old table aside, promote, then delete the old copy. A crash at
-    * any point leaves a COMPLETE table either at `path` or at `path.old`;
-    * [[recoverSwap]] (run at store construction and here — never by a
-    * reader) finishes an interrupted swap. */
+  /** Swap-rewrite a whole checkpoint or snapshot table (compaction,
+    * reindex, prune): write the replacement, move the old table aside,
+    * promote, then delete the old copy. A crash at any point leaves a
+    * COMPLETE table either at `path` or at `path.old`; [[recoverSwap]]
+    * (run at store construction and here — never by a reader) finishes an
+    * interrupted swap. `replacement` is by-name: it is planned AFTER that
+    * recovery, so a table found moved aside is rewritten from its
+    * restored rows, not read as empty. */
   private def rewriteTable(
-      path: String, replacement: DataFrame, format: String = "parquet",
-      partitionCols: Seq[String] = Nil): Unit = {
+      path: String, replacement: => DataFrame, format: String = "parquet"): Unit = {
     recoverSwap(path)
     val tmp = s"$path.rewrite"
     deletePath(tmp)
-    replacement.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).format(format).save(tmp)
+    replacement.write.mode(SaveMode.Overwrite).format(format).save(tmp)
     val old = s"$path.old"
     deletePath(old)
     renamePath(path, old)
@@ -209,21 +180,6 @@ final class StateStore(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else
       spark.read.option("recursiveFileLookup", "true").schema(schema).parquet(path)
-  }
-
-  /** [[readTable]] for the collection-partitioned mutation tables:
-    * partition DISCOVERY (not recursive lookup — the two are mutually
-    * exclusive) binds `collection` to the directory key, so a collection
-    * predicate becomes a PartitionFilter that prunes whole directories
-    * before any footer is read. Discovery appends the partition column
-    * last; the select restores the declared schema order. */
-  private def readPartitionedTable(path: String, schema: StructType): DataFrame = {
-    if (!pathExists(path))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      spark.read.option("basePath", path).schema(schema).parquet(path)
-        .select(schema.fieldNames.map(col).toSeq: _*)
   }
 
   // ------------------------------------------------------------------
@@ -277,7 +233,7 @@ final class StateStore(
     * The log is JSON-lines written straight through the Hadoop FS — one
     * tiny record per commit does not deserve a Spark job (it was ~15% of
     * small-batch ingestion wall-clock as a 1-row parquet write). Same
-    * staged-write + atomic-rename protocol as the data tables, and the
+    * staged-write + atomic-rename protocol as the snapshot table, and the
     * file name is deterministic per (key, height), so a crash replay of
     * the same checkpoint is a no-op skip. */
   def writeCheckpoint(cp: Checkpoint): Unit = {
@@ -321,38 +277,29 @@ final class StateStore(
     }
 
   /** Rewrite the checkpoint log to one row per key (its live value). */
-  def compactCheckpoints(): Unit = {
-    val latest = checkpointsDF
+  def compactCheckpoints(): Unit =
+    rewriteTable(checkpointsPath, checkpointsDF
       .groupBy(col("key"))
       .agg(max_by(struct(col("height"), col("block_id"), col("block_num")), col("height")).as("w"))
       .select(col("key"), col("w.height").as("height"),
         col("w.block_id").as("block_id"), col("w.block_num").as("block_num"))
-      .coalesce(1)
-    rewriteTable(checkpointsPath, latest, format = "json")
-  }
+      .coalesce(1), format = "json")
 
-  /** Atomically append pre-shaped mutation DataFrames. `commitId` names the
-    * committed directory: pass a deterministic id (batch height range, shard
-    * number) to make crash-replays skip instead of duplicate; the default
-    * random id gives plain append semantics. Returns false if that commit
-    * already exists. */
-  // Manifest-protocol table handles (unused under RenameCommit). Same
-  // collection=N hive layout as the rename protocol, nested per commit dir,
-  // so collection predicates prune directories under BOTH protocols.
-  // statsCols: the manifest records per-file (tablet/singlet id, height,
-  // key) bounds at commit, and the point/as-of read paths prune the FILE
-  // LIST driver-side before Spark lists or footer-reads anything
-  // ([[ManifestTable.readPruned]]) — at a micro-batch cadence the live
-  // commit count is what a read pays for first, and manifest stats cut it
-  // without waiting for compaction.
-  private lazy val manifestTabletRows =
+  // The mutation tables. statsCols: the manifest records per-file
+  // (tablet/singlet id, height, key) bounds at commit, and the point/as-of
+  // read paths prune the FILE LIST driver-side before Spark lists or
+  // footer-reads anything ([[ManifestTable.readPruned]]) — at a
+  // micro-batch cadence the live commit count is what a read pays for
+  // first, and manifest stats cut it without waiting for compaction.
+  private val manifestTabletRows =
     new ManifestTable(tabletRowsPath, Schemas.tabletRows, Some("collection"),
       statsCols = Seq("tablet_id", "height", "primary_key"),
       checkpointInterval = manifestCheckpointInterval)
-  private lazy val manifestSingletEntries =
+  private val manifestSingletEntries =
     new ManifestTable(singletEntriesPath, Schemas.singletEntries, Some("collection"),
       statsCols = Seq("singlet_id", "height"),
       checkpointInterval = manifestCheckpointInterval)
+  private def manifestTables = Seq(manifestTabletRows, manifestSingletEntries)
 
   private[graft] def manifestTableFor(path: String): ManifestTable =
     if (path == tabletRowsPath) manifestTabletRows else manifestSingletEntries
@@ -364,18 +311,15 @@ final class StateStore(
     * escalation-lease heartbeats written). The
     * operator's early-warning signal for an undersized
     * lease or a hot table — surfaced as
-    * [[graft.streaming.PipelineMetrics]] gauges. Zeros under
-    * [[StateStore.RenameCommit]] (no optimistic publish there). */
-  def publishContentionStats: (Long, Long, Long, Long, Long, Long) = commitProtocol match {
-    case ManifestCommit =>
-      val ts = Seq(manifestTabletRows, manifestSingletEntries)
-      (ts.map(_.lostRaceCount.get()).sum,
-        ts.map(_.leaseTakeoverCount.get()).sum,
-        ts.map(_.fencedPublishCount.get()).sum,
-        ts.map(_.rebasedMergeCount.get()).sum,
-        ts.map(_.escalatedMergeCount.get()).sum,
-        ts.map(_.reservationHeartbeatCount.get()).sum)
-    case RenameCommit => (0L, 0L, 0L, 0L, 0L, 0L)
+    * [[graft.streaming.PipelineMetrics]] gauges. */
+  def publishContentionStats: (Long, Long, Long, Long, Long, Long) = {
+    val ts = manifestTables
+    (ts.map(_.lostRaceCount.get()).sum,
+      ts.map(_.leaseTakeoverCount.get()).sum,
+      ts.map(_.fencedPublishCount.get()).sum,
+      ts.map(_.rebasedMergeCount.get()).sum,
+      ts.map(_.escalatedMergeCount.get()).sum,
+      ts.map(_.reservationHeartbeatCount.get()).sum)
   }
 
   /** Head consistency cross-check over this store's manifest tables
@@ -387,74 +331,48 @@ final class StateStore(
     * documented contract (e.g. multi-writer on a blind-PUT object
     * store). Two small metadata reads per table; cheap enough for a
     * periodic maintenance probe ([[graft.streaming.IngestionPipeline]]
-    * runs it on `graft.headCheck.intervalMs`). Empty under
-    * [[StateStore.RenameCommit]] (no pointer to check). */
-  def verifyHeads(): Seq[String] = commitProtocol match {
-    case ManifestCommit =>
-      Seq(manifestTabletRows, manifestSingletEntries).flatMap(_.verifyHead())
-    case RenameCommit => Seq.empty
-  }
+    * runs it on `graft.headCheck.intervalMs`). */
+  def verifyHeads(): Seq[String] = manifestTables.flatMap(_.verifyHead())
 
   /** Forensic attribution audit over this store's manifest tables
     * ([[graft.store.ManifestTable.auditHistory]]): generations whose
     * surviving owned manifest objects disagree with their recorded
-    * owner. Empty under [[StateStore.RenameCommit]]. */
-  def auditHistories(): Seq[String] = commitProtocol match {
-    case ManifestCommit =>
-      Seq(manifestTabletRows, manifestSingletEntries).flatMap(_.auditHistory())
-    case RenameCommit => Seq.empty
-  }
+    * owner. */
+  def auditHistories(): Seq[String] = manifestTables.flatMap(_.auditHistory())
 
+  /** Atomically append pre-shaped tablet rows as one manifest commit.
+    * `commitId` names the commit: pass a deterministic id (batch height
+    * range, shard number) to make crash-replays skip instead of
+    * duplicate; the default random id gives plain append semantics.
+    * Returns false if that commit already exists. */
   def writeTabletRows(
       df: DataFrame,
-      commitId: String = java.util.UUID.randomUUID().toString): Boolean = {
+      commitId: String = java.util.UUID.randomUUID().toString): Boolean =
     // Leading `collection` in the sort satisfies the partitioned writer's
     // required ordering (no second sort) and keeps each output file
     // sorted by (tablet_id, height) for row-group pruning.
-    val sorted = df.sortWithinPartitions("collection", "tablet_id", "height")
-    commitProtocol match {
-      case ManifestCommit => manifestTabletRows.commit(sorted, commitId)
-      case RenameCommit => atomicAppendPartitioned(sorted, tabletRowsPath, commitId)
-    }
-  }
+    manifestTabletRows.commit(
+      df.sortWithinPartitions("collection", "tablet_id", "height"), commitId)
 
   /** Atomically append pre-shaped singlet-entry DataFrames (same contract
     * as [[writeTabletRows]]). */
   def writeSingletEntries(
       df: DataFrame,
-      commitId: String = java.util.UUID.randomUUID().toString): Boolean = {
-    val sorted = df.sortWithinPartitions("collection", "singlet_id", "height")
-    commitProtocol match {
-      case ManifestCommit => manifestSingletEntries.commit(sorted, commitId)
-      case RenameCommit => atomicAppendPartitioned(sorted, singletEntriesPath, commitId)
-    }
-  }
+      commitId: String = java.util.UUID.randomUUID().toString): Boolean =
+    manifestSingletEntries.commit(
+      df.sortWithinPartitions("collection", "singlet_id", "height"), commitId)
 
-  def tabletRows: DataFrame = commitProtocol match {
-    case ManifestCommit => manifestTabletRows.read()
-    case RenameCommit => readPartitionedTable(tabletRowsPath, Schemas.tabletRows)
-  }
-  def singletEntries: DataFrame = commitProtocol match {
-    case ManifestCommit => manifestSingletEntries.read()
-    case RenameCommit => readPartitionedTable(singletEntriesPath, Schemas.singletEntries)
-  }
+  def tabletRows: DataFrame = manifestTabletRows.read()
+  def singletEntries: DataFrame = manifestSingletEntries.read()
 
-  /** [[tabletRows]] with manifest-stats file pruning under
-    * [[ManifestCommit]] (plain table under [[RenameCommit]], where parquet
-    * row-group stats already serve the same predicates once footers are
-    * open). `filters` MUST be implied by the Catalyst predicates the read
-    * applies on top — pruning shrinks the scan, never the result. */
+  /** [[tabletRows]] with manifest-stats file pruning. `filters` MUST be
+    * implied by the Catalyst predicates the read applies on top — pruning
+    * shrinks the scan, never the result. */
   private[graft] def tabletRowsPruned(filters: Seq[ManifestTable.StatsFilter]): DataFrame =
-    commitProtocol match {
-      case ManifestCommit => manifestTabletRows.readPruned(filters)
-      case RenameCommit => tabletRows
-    }
+    manifestTabletRows.readPruned(filters)
 
   private[graft] def singletEntriesPruned(filters: Seq[ManifestTable.StatsFilter]): DataFrame =
-    commitProtocol match {
-      case ManifestCommit => manifestSingletEntries.readPruned(filters)
-      case RenameCommit => singletEntries
-    }
+    manifestSingletEntries.readPruned(filters)
   def tabletSnapshots: DataFrame = readTable(snapshotsPath, Schemas.tabletSnapshots)
 
   def checkpointsDF: DataFrame = {
@@ -887,103 +805,38 @@ final class StateStore(
 
   /** [[readTabletDiff]]'s STREAMING twin, step 1: subscribe to the
     * mutation table — a continuous append stream of committed rows, one
-    * micro-batch per published commit once caught up.
+    * micro-batch per published commit once caught up. The source is
+    * [[graft.streaming.ManifestChangefeed]]: generation pointer as offset
+    * (O(1) poll, no listing), manifest diff as batch plan, exactly-once
+    * from checkpointed generations, compaction generations skipped as
+    * `dataChange = false` (a compaction mid-stream re-emits nothing).
+    * Rows carry `_generation`/`_commit_id` provenance.
     *
-    *   - [[ManifestCommit]]: the [[graft.streaming.ManifestChangefeed]]
-    *     source — generation pointer as offset (O(1) poll, no listing),
-    *     manifest diff as batch plan, exactly-once from checkpointed
-    *     generations, compaction generations skipped as
-    *     `dataChange = false`. Rows carry `_generation`/`_commit_id`
-    *     provenance.
-    *   - [[RenameCommit]]: Spark's file source IS the changefeed —
-    *     commit directories appear atomically by rename, so the
-    *     checkpointed file listing is the offset (the same reuse as
-    *     [[graft.streaming.BlockArchiveSource]]). Provenance:
-    *     `_commit_id` from the committed directory name, `_generation`
-    *     null (no generation counter under this protocol). CAVEAT: the
-    *     file source tracks files by path, so a COMPACTION mid-stream
-    *     re-emits the rewritten table — do not compact under a live
-    *     rename-protocol subscriber (the manifest protocol rides through
-    *     compaction; that asymmetry is inherent to the two protocols'
-    *     metadata, not fixable here).
-    *
-    * `startingGeneration` ("0" = full history replay, "latest" = only
-    * new commits, a number = after that generation) applies to the
-    * manifest protocol; the rename file source always replays.
-    * `maxGenerationsPerTrigger` (manifest protocol) caps how many pending
-    * generations one micro-batch may span — catch-up over a deep backlog
-    * splits into bounded, individually-committed slices; the rename
-    * protocol's file source has the engine's own `maxFilesPerTrigger`
-    * for the same job. */
+    * `startingGeneration`: "0" = full history replay, "latest" = only new
+    * commits, a number = after that generation. `maxGenerationsPerTrigger`
+    * caps how many pending generations one micro-batch may span —
+    * catch-up over a deep backlog splits into bounded,
+    * individually-committed slices; `maxFilesPerTrigger` /
+    * `maxBytesPerTrigger` cap its volume. */
   def changefeedStream(
       startingGeneration: String = "0",
       maxGenerationsPerTrigger: Option[Long] = None,
       maxFilesPerTrigger: Option[Long] = None,
       maxBytesPerTrigger: Option[Long] = None): DataFrame =
-    mutationChangefeed(tabletRowsPath, "tablet_rows",
-      Schemas.tabletRows, startingGeneration, maxGenerationsPerTrigger,
-      maxFilesPerTrigger, maxBytesPerTrigger)
+    graft.streaming.ManifestChangefeed.stream(spark, tabletRowsPath, "tablet_rows",
+      startingGeneration, maxGenerationsPerTrigger = maxGenerationsPerTrigger,
+      maxFilesPerTrigger = maxFilesPerTrigger, maxBytesPerTrigger = maxBytesPerTrigger)
 
-  /** [[changefeedStream]] for the SINGLET entry table — same offsets,
-    * provenance, and protocol dispatch over `singlet_entries`. */
+  /** [[changefeedStream]] for the SINGLET entry table — same offsets and
+    * provenance over `singlet_entries`. */
   def singletChangefeedStream(
       startingGeneration: String = "0",
       maxGenerationsPerTrigger: Option[Long] = None,
       maxFilesPerTrigger: Option[Long] = None,
       maxBytesPerTrigger: Option[Long] = None): DataFrame =
-    mutationChangefeed(singletEntriesPath, "singlet_entries",
-      Schemas.singletEntries, startingGeneration, maxGenerationsPerTrigger,
-      maxFilesPerTrigger, maxBytesPerTrigger)
-
-  private def mutationChangefeed(
-      path: String, table: String, schema: StructType,
-      startingGeneration: String,
-      maxGenerationsPerTrigger: Option[Long] = None,
-      maxFilesPerTrigger: Option[Long] = None,
-      maxBytesPerTrigger: Option[Long] = None): DataFrame =
-    commitProtocol match {
-      case ManifestCommit =>
-        graft.streaming.ManifestChangefeed.stream(
-          spark, path, table, startingGeneration,
-          maxGenerationsPerTrigger = maxGenerationsPerTrigger,
-          maxFilesPerTrigger = maxFilesPerTrigger,
-          maxBytesPerTrigger = maxBytesPerTrigger)
-      case RenameCommit =>
-        val (fs, p) = fsPath(path)
-        fs.mkdirs(p)
-        // Recursive lookup + path-derived columns, NOT partition
-        // discovery: the file source binds partitioning from the listing
-        // at stream DEFINITION, so a subscriber started on an empty (or
-        // not-yet-written) table would bake in "no partition columns" and
-        // mis-read every later file. The `collection=N` value is in the
-        // path either way; a changefeed reads every new file, so losing
-        // partition pruning costs nothing here.
-        val filePath = col("_metadata").getField("file_path")
-        val dataSchema = org.apache.spark.sql.types.StructType(
-          schema.fields.filterNot(_.name == "collection"))
-        val reader = spark.readStream
-          .option("recursiveFileLookup", "true")
-          .schema(dataSchema)
-        // The file source has no generation axis (maxGenerationsPerTrigger
-        // does not apply), but its own admission options carry the SAME
-        // volume contract as the manifest source's — pass them through so
-        // a caller's budget is never silently dropped on this protocol.
-        maxFilesPerTrigger.foreach(m =>
-          reader.option("maxFilesPerTrigger", m.toString))
-        maxBytesPerTrigger.foreach(m =>
-          reader.option("maxBytesPerTrigger", m.toString))
-        reader
-          .parquet(path)
-          .select(
-            regexp_extract(filePath, "/collection=([^/]+)/", 1)
-              .cast("int").as("collection") +:
-              dataSchema.fieldNames.map(col).toSeq :+
-              lit(null).cast("long").as(
-                graft.streaming.ManifestChangefeed.GenerationCol) :+
-              regexp_extract(filePath,
-                "/collection=[^/]+/([^/]+)/[^/]+$", 1).as(
-                graft.streaming.ManifestChangefeed.CommitIdCol): _*)
-    }
+    graft.streaming.ManifestChangefeed.stream(spark, singletEntriesPath, "singlet_entries",
+      startingGeneration, maxGenerationsPerTrigger = maxGenerationsPerTrigger,
+      maxFilesPerTrigger = maxFilesPerTrigger, maxBytesPerTrigger = maxBytesPerTrigger)
 
   /** [[readTabletDiff]]'s STREAMING twin, step 2: the committed-mutation
     * stream folded into per-key change events
@@ -1015,40 +868,34 @@ final class StateStore(
         col("change_height"), col("old_value"), col("new_value"))
 
   /** Small-files maintenance for the mutation tables: a 1 s micro-batch
-    * cadence appends one committed directory per batch (~86k/day), and at
-    * scale the file LISTING and footer reads come to dominate scan cost
-    * long before data size does. Compaction rewrites the table as `n`
+    * cadence appends one commit per batch (~86k/day), and at scale the
+    * per-file planning and footer reads come to dominate scan cost long
+    * before data size does. Compaction rewrites the table as `n`
     * range-partitioned, height-sorted files on (tablet_id, height) —
-    * contiguous key ranges per file, so parquet row-group stats prune BOTH
-    * the tablet and the height predicate — via the crash-safe swap
-    * ([[recoverSwap]] finishes an interrupted one; readers never see a
-    * partial table). Contents are preserved exactly.
+    * contiguous key ranges per file, so manifest and row-group stats prune
+    * BOTH the tablet and the height predicate — published as one
+    * replacement generation (readers see the old generation or the new
+    * one, never a partial table). Contents are preserved exactly.
     *
     * Replay safety after compaction rests on the checkpoint linearity
-    * guard, NOT on batch-directory names: a redelivered batch drops
-    * heights at or below the checkpoint before writing, so the loss of
-    * the deterministic directory skip is harmless. Single-writer: run
-    * between batches, like pruning. Returns the number of committed
-    * directories folded in. */
+    * guard, NOT on commit ids: a redelivered batch drops heights at or
+    * below the checkpoint before writing, so the loss of the
+    * deterministic commit-id skip is harmless. Returns the number of
+    * commits folded in. */
   def compactTabletRows(numFiles: Int = 0): Long =
-    compactMutationTable(tabletRowsPath, Schemas.tabletRows,
-      Seq("tablet_id", "height"), numFiles)
+    compactMutationTable(manifestTabletRows, Seq("tablet_id", "height"), numFiles)
 
   /** Maintenance: synthesize the delta sidecars a legacy (pre-sidecar)
     * store is missing, for BOTH mutation tables — one full-manifest fold
     * each, after which every changefeed catch-up takes the linear
     * sidecar path instead of re-paying the quadratic fold per
-    * subscription ([[ManifestTable.backfillDeltaSidecars]]). Manifest
-    * protocol only (the rename protocol has no manifests to fold);
-    * single-writer discipline, like compaction. Returns
-    * table → (synthesized, alreadyPresent). */
-  def backfillDeltaSidecars(): Map[String, (Int, Int)] = {
-    require(commitProtocol == ManifestCommit,
-      "backfillDeltaSidecars: sidecars exist only under the manifest protocol")
+    * subscription ([[ManifestTable.backfillDeltaSidecars]]).
+    * Single-writer discipline. Returns table → (synthesized,
+    * alreadyPresent). */
+  def backfillDeltaSidecars(): Map[String, (Int, Int)] =
     Map(
       "tablet_rows" -> manifestTabletRows.backfillDeltaSidecars(),
       "singlet_entries" -> manifestSingletEntries.backfillDeltaSidecars())
-  }
 
   /** [[compactTabletRows]] with the Z-ORDER (interleaved) layout —
     * SURVEY §7.4.7's second clustering dimension. The height-sorted
@@ -1057,11 +904,11 @@ final class StateStore(
     * tight min/max boxes in BOTH dimensions — `height`-band scans AND
     * `primary_key` point reads ([[readTabletRowAt]], the as-of join's
     * equi-probe side) prune, each from its own column's parquet stats.
-    * Same exact contents, same crash-safe swap; pick per table by its
+    * Same exact contents, same replacement publish; pick per table by its
     * read mix. */
   def compactTabletRowsInterleaved(numFiles: Int = 0): Long =
-    compactMutationTable(tabletRowsPath, Schemas.tabletRows,
-      Seq("tablet_id", "height"), numFiles, zorderKey = Some("primary_key"))
+    compactMutationTable(manifestTabletRows, Seq("tablet_id", "height"), numFiles,
+      zorderKey = Some("primary_key"))
 
   /** Compaction with the layout chosen PER TABLET from the observed read
     * mix ([[readMix]]): point-read-heavy tablets compact interleaved,
@@ -1112,9 +959,8 @@ final class StateStore(
         overrides.collect { case (t, "sorted") => t }
     val folded =
       if (interleaved.isEmpty) compactTabletRows(numFiles)
-      else compactMutationTable(tabletRowsPath, Schemas.tabletRows,
-        Seq("tablet_id", "height"), numFiles,
-        zorderKey = Some("primary_key"), zorderOnly = Some(interleaved))
+      else compactMutationTable(manifestTabletRows, Seq("tablet_id", "height"),
+        numFiles, zorderKey = Some("primary_key"), zorderOnly = Some(interleaved))
     (folded, interleaved)
   }
 
@@ -1122,11 +968,10 @@ final class StateStore(
     * variant: a singlet's key IS `singlet_id`, already the leading sort
     * dimension — there is no second key axis to interleave.) */
   def compactSingletEntries(numFiles: Int = 0): Long =
-    compactMutationTable(singletEntriesPath, Schemas.singletEntries,
-      Seq("singlet_id", "height"), numFiles)
+    compactMutationTable(manifestSingletEntries, Seq("singlet_id", "height"), numFiles)
 
   private def compactMutationTable(
-      path: String, schema: StructType, keys: Seq[String], numFiles: Int,
+      t: ManifestTable, keys: Seq[String], numFiles: Int,
       zorderKey: Option[String] = None,
       zorderOnly: Option[Set[String]] = None): Long = {
     val n =
@@ -1170,42 +1015,25 @@ final class StateStore(
           df.repartitionByRange(n, keys.map(col): _*)
             .sortWithinPartitions(col("collection") +: keys.map(col): _*)
       }
-    commitProtocol match {
-      case ManifestCommit =>
-        val t = manifestTableFor(path)
-        val before = t.currentGeneration()
-          .map(g => t.manifestEntries(g).size.toLong).getOrElse(0L)
-        if (before == 0L) return 0L
-        // replaceAll publishes a manifest referencing only the compacted
-        // files; prior generations become invisible at the pointer swap
-        // and their directories are swept after. Retrying form: a writer
-        // committing mid-compaction costs a recompute (the thunk re-reads
-        // the new head), never a silently-lost commit. The inline sweep
-        // defaults to the publish-lease age guard so it is ALSO safe
-        // beside live writers (an in-flight commit's directory is
-        // unreferenced until its pointer swap — younger than the lease
-        // by the protocol's own bound, so it is skipped); pre-compaction
-        // generations' directories are reclaimed by the NEXT compaction
-        // (or a dedicated sweep) once older than the lease. Single-writer
-        // deployments opt into immediate reclamation with
-        // graft.compact.sweepMinAgeMs=0.
-        t.replaceAllRetrying(() => clustered(t.read()), "compact")
-        t.sweepOrphans(minAgeMillis = StateStore.compactSweepMinAgeMillis)
-        before
-      case RenameCommit =>
-        recoverSwap(path)
-        if (!pathExists(path)) return 0L
-        val (fs, p) = fsPath(path)
-        // Committed batch directories live one level down, under collection=N.
-        val before = fs.listStatus(p).filter(_.isDirectory).map { c =>
-          if (c.getPath.getName.startsWith("collection="))
-            fs.listStatus(c.getPath).count(_.isDirectory).toLong
-          else 1L
-        }.sum
-        rewriteTable(path, clustered(readPartitionedTable(path, schema)),
-          partitionCols = Seq("collection"))
-        before
-    }
+    val before = t.currentGeneration()
+      .map(g => t.manifestEntries(g).size.toLong).getOrElse(0L)
+    if (before == 0L) return 0L
+    // replaceAll publishes a manifest referencing only the compacted
+    // files; prior generations become invisible at the pointer swap
+    // and their directories are swept after. Retrying form: a writer
+    // committing mid-compaction costs a recompute (the thunk re-reads
+    // the new head), never a silently-lost commit. The inline sweep
+    // defaults to the publish-lease age guard so it is ALSO safe
+    // beside live writers (an in-flight commit's directory is
+    // unreferenced until its pointer swap — younger than the lease
+    // by the protocol's own bound, so it is skipped); pre-compaction
+    // generations' directories are reclaimed by the NEXT compaction
+    // (or a dedicated sweep) once older than the lease. Single-writer
+    // deployments opt into immediate reclamation with
+    // graft.compact.sweepMinAgeMs=0.
+    t.replaceAllRetrying(() => clustered(t.read()), "compact")
+    t.sweepOrphans(minAgeMillis = StateStore.compactSweepMinAgeMillis)
+    before
   }
 
   /** ReindexTablets (indexing.go:100–171): rebuild EXISTING tablet index
@@ -1380,8 +1208,8 @@ final class StateStore(
     * the snapshot route (the reference's point read consults the index
     * the same way, read.go:240–260): the key predicate prunes WITHIN
     * files, but only the snapshot's height floor lets the scan skip the
-    * key's pre-snapshot history — whole FILES under the manifest
-    * protocol, row groups under the height-sorted layout. Result is
+    * key's pre-snapshot history — whole FILES by manifest stats, row
+    * groups under the height-sorted layout. Result is
     * identical to the full-history argmax either way (spec-pinned,
     * including tombstone/reinsert and speculative overlays). */
   def readTabletRowAt(
@@ -1519,14 +1347,11 @@ final class StateStore(
 }
 
 object StateStore {
-  /** Mutation-table commit protocol (class doc): [[RenameCommit]] stages
-    * then atomically renames directories (HDFS/local); [[ManifestCommit]]
-    * is the object-store-safe manifest-pointer protocol
-    * ([[ManifestTable]]). Checkpoints and snapshots are unaffected: the
-    * checkpoint log already writes deterministic single FILES (an atomic
-    * PUT on object stores), and snapshot appends are operationally rare. */
+  /** The mutation tables' commit protocol (class doc): the
+    * object-store-safe manifest-pointer protocol of [[ManifestTable]]. It
+    * has exactly one value — a name for call sites that spell the
+    * protocol out, not a choice. */
   sealed trait CommitProtocol
-  case object RenameCommit extends CommitProtocol
   case object ManifestCommit extends CommitProtocol
 
   /** One [[StateStore.tabletSnapshotLookup]] answer: the chosen
@@ -1574,22 +1399,6 @@ object StateStore {
       .orElse(sys.env.get("GRAFT_READMIX_ABSORB_AGE_MS"))
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
       .filter(_ >= 0).getOrElse(ManifestTable.publishLeaseMillis)
-
-  /** Detect which commit protocol wrote the store at `root`: a manifest
-    * table is unmistakable by its generation pointer. A reader that opens
-    * a manifest store under [[RenameCommit]] would scan the raw `d-*`
-    * attempt directories — including crashed uncommitted attempts and
-    * pre-compaction generations not yet swept — so any read-only surface
-    * taking a bare root (the SQL table function, tools) must go through
-    * this instead of assuming a default. Empty/new roots detect as
-    * [[RenameCommit]] (both protocols read an absent table as empty). */
-  def detectProtocol(root: String)(implicit spark: SparkSession): CommitProtocol = {
-    val p = new Path(s"$root/tablet_rows/_gen")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p) || fs.exists(new Path(s"$root/singlet_entries/_gen")))
-      ManifestCommit
-    else RenameCommit
-  }
 
   /** Per-tablet point-read vs tail-scan counters. A tablet PREFERS the
     * interleaved (z-ordered) compaction layout once its point reads

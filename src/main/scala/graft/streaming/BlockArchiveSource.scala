@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.StructType
   * [[StreamedBlock]] rows; a producer makes them VISIBLE atomically by
   * writing elsewhere and renaming into the directory
   * ([[writeArchiveFile]]), the same invisible-until-promoted discipline
-  * the store's commit protocol uses.
+  * the store's checkpoint log uses.
   *
   * Ordering: the file source processes files oldest-modification-first
   * and the pipeline's contiguity + linearity guards reject any gap, so a

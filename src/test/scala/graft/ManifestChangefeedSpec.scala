@@ -759,50 +759,6 @@ class ManifestChangefeedSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("rename-protocol volume caps: maxFilesPerTrigger reaches the file " +
-    "source — a catch-up splits per the budget instead of one monolith") {
-    implicit val s = spark
-    val root = tmpDir("cf-rename-cap")
-    val store = new StateStore(root) // RenameCommit default
-    (1 to 4).foreach(h => store.writeBatch(Seq(req(h, ("t1", s"k$h", s"v$h")))))
-    val out = tmpDir("cf-rename-cap-out")
-    val q = store.changefeedStream(maxFilesPerTrigger = Some(1L))
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", tmpDir("cf-rename-cap-ck"))
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.read.parquet(out).count() === 4L, "complete delivery")
-      val dataBatches = settledDataBatches(q, atLeast = 4)
-      assert(dataBatches >= 4,
-        s"4 commit files at 1 file/trigger must split into >=4 batches, got $dataBatches")
-    } finally q.stop()
-  }
-
-  test("rename-protocol dispatch: the file source is the changefeed, " +
-    "commit-id provenance from the committed directory name") {
-    implicit val s = spark
-    val root = tmpDir("cf-rename")
-    val store = new StateStore(root) // RenameCommit default
-
-    val stream = store.changefeedStream()
-    val sink = "cf_rename_sink"
-    val (snapshots, q) = drainAfter(stream, sink, tmpDir("cf-rename-ck"))(Seq(
-      () => store.writeBatch(Seq(req(1, ("t1", "a", "a1")), req(2, ("t1", "b", "b2")))),
-      () => store.writeBatch(Seq(req(3, ("t1", "c", "c3"))))
-    ))(() => spark.table(sink).collect().map(r =>
-      (r.getAs[String]("primary_key"), r.getAs[Long]("height"),
-        r.getAs[String]("_commit_id"))).toSet)
-    try {
-      assert(snapshots(1).map(t => (t._1, t._2)) ===
-        Set(("a", 1L), ("b", 2L), ("c", 3L)))
-      // _commit_id = the batch directory name (b<lo>-<hi>), never empty.
-      assert(snapshots(1).forall(_._3.startsWith("b")))
-      assert(snapshots(1).map(_._3).size === 2 ||
-        snapshots(1).map(_._3).toSeq.distinct.size === 2)
-    } finally q.stop()
-  }
-
   /** Drive a source's admission loop directly, returning the slice ends. */
   private def slicesOf(src: graft.streaming.ManifestChangefeedSource): Seq[Long] = {
     val limit = src.getDefaultReadLimit

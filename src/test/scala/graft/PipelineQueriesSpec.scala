@@ -2127,4 +2127,13 @@ class PipelineQueriesSpec extends SparkTestBase {
     val cc = run("p_cls_calibration").queryExecution.executedPlan.toString
     assert(!cc.contains("Join"), "calibration must not join the two filters")
   }
+
+  test("parquetRowCount counts again after the files under a path change") {
+    import spark.implicits._
+    val path = s"${tmpDir("rowcount")}/t.parquet"
+    (1 to 3).toDF("x").write.parquet(path)
+    assert(graft.queries.PipelineQueries.parquetRowCount(spark, path) === 3L)
+    (1 to 5).toDF("x").write.mode("overwrite").parquet(path)
+    assert(graft.queries.PipelineQueries.parquetRowCount(spark, path) === 5L)
+  }
 }

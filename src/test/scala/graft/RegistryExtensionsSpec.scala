@@ -226,7 +226,7 @@ class RegistryExtensionsSpec extends SparkTestBase {
           Nil)
       (0L to 5L).foreach(h => store.writeBatch(Seq(req(h))))
       // Simulate a crashed commit: data staged under an attempt dir that no
-      // manifest references. A RenameCommit-opened reader would scan it.
+      // manifest references; the reader must not scan it.
       val m = store.manifestTableFor(store.tabletRowsPath)
       m.failBeforePublish = true
       intercept[IllegalStateException] {

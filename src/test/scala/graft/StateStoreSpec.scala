@@ -139,15 +139,15 @@ class StateStoreSpec extends SparkTestBase {
     import s.implicits._
     val store = new StateStore(tmpDir("store"))
     store.writeBatch(Seq(req(0, ("t1", "a", "a0"))))
-    // Simulate the crash window: the batch-1 DATA directory is committed
-    // (deterministic name b…1-…1) but the process died before the
+    // Simulate the crash window: the batch-1 DATA is committed
+    // (deterministic commit id b…1-…1) but the process died before the
     // checkpoint write.
     val orphan = Seq((1, "t1", 1L, "b", "b1".getBytes("UTF-8"), false))
       .toDF(StateStore.tabletRowCols: _*)
     store.writeTabletRows(orphan, f"b${1L}%017d-${1L}%017d")
     assert(store.checkpoint(StateStore.GlobalCheckpointKey).get.height === 0L)
     // foreachBatch redelivers the batch: the linearity guard admits it
-    // (checkpoint unchanged), the data write SKIPS (directory exists), the
+    // (checkpoint unchanged), the data write SKIPS (commit exists), the
     // checkpoint lands.
     store.writeBatch(Seq(req(1, ("t1", "b", "b1"))))
     assert(store.tabletRows.filter(col("height") === 1L).count() === 1L)
@@ -204,13 +204,13 @@ class StateStoreSpec extends SparkTestBase {
     val store = new StateStore(tmpDir("store"))
     (0L to 3L).foreach(h => store.writeBatch(Seq(req(h, ("t1", "k", s"v$h")))))
     val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(store.tabletRowsPath)
+    val p = new org.apache.hadoop.fs.Path(store.checkpointsPath)
     val fs = p.getFileSystem(conf)
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(store.tabletRowsPath + ".old")))
-    // compaction (a write path) recovers the moved-aside table, then
-    // compacts it — no rows lost.
-    store.compactTabletRows()
-    assert(store.tabletRows.count() === 4L)
+    assert(fs.rename(p, new org.apache.hadoop.fs.Path(store.checkpointsPath + ".old")))
+    // Checkpoint-log compaction (a write path) recovers the moved-aside
+    // log, then compacts it — no checkpoint lost.
+    store.compactCheckpoints()
+    assert(store.checkpointFresh(StateStore.GlobalCheckpointKey).get.height === 3L)
   }
 
   test("checkpoint log compaction preserves latest-per-key and shrinks the log") {
@@ -282,24 +282,21 @@ class StateStoreSpec extends SparkTestBase {
       store.writeBatch(Seq(req(h, (s"t${h % 4}", s"pk${h % 3}", s"v$h")))))
     val beforeRows = store.tabletRows.collect()
       .map(r => (r.getString(1), r.getLong(2), r.getString(3))).sorted.toSeq
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(store.tabletRowsPath)
-    val fs = p.getFileSystem(conf)
-    // Hive layout: collection=1/ holds one committed dir per batch.
-    val collDir = new org.apache.hadoop.fs.Path(store.tabletRowsPath + "/collection=1")
-    assert(fs.listStatus(p).count(_.isDirectory) === 1)
-    assert(fs.listStatus(collDir).count(_.isDirectory) === 20)
+    // The live manifest holds one commit per batch.
+    val mt = store.manifestTableFor(store.tabletRowsPath)
+    def liveCommits = mt.manifestEntries(mt.currentGeneration().get).size
+    assert(liveCommits === 20)
     val folded = store.compactTabletRows(numFiles = 2)
     assert(folded === 20L)
-    // Batch dirs folded into flat files under the partition dir,
-    // identical contents.
-    assert(fs.listStatus(collDir).count(_.isDirectory) === 0)
+    // Batch commits folded into one replacement commit, identical
+    // contents.
+    assert(liveCommits === 1)
     val afterRows = store.tabletRows.collect()
       .map(r => (r.getString(1), r.getLong(2), r.getString(3))).sorted.toSeq
     assert(afterRows === beforeRows)
     // The store keeps working: next batch appends, checkpoint advances,
     // and a REPLAYED batch is still dropped by the linearity guard even
-    // though its deterministic directory name is gone post-compaction.
+    // though its deterministic commit id is gone post-compaction.
     store.writeBatch(Seq(req(20, ("t0", "pk0", "v20"))))
     assert(store.checkpoint(StateStore.GlobalCheckpointKey).get.height === 20L)
     intercept[IllegalArgumentException] {
@@ -336,7 +333,7 @@ class StateStoreSpec extends SparkTestBase {
     store.writeBatch(Seq(req(2, ("t1", "c", "c2"))))
     assert(store.tabletRows.count() === 3L)
     assert(store.readTabletAt("t1", 2L).count() === 3L)
-    // An already-manifested commit id is a skip, like the rename protocol.
+    // An already-manifested commit id is a skip.
     import s.implicits._
     val dup = Seq((1, "t1", 2L, "c", "c2".getBytes("UTF-8"), false))
       .toDF(StateStore.tabletRowCols: _*)
@@ -621,8 +618,7 @@ class StateStoreSpec extends SparkTestBase {
     assert(rows === Seq(
       (1, "t1", 0L, "a", "c1-0"), (1, "t1", 1L, "a", "c1-1"),
       (2, "u1", 0L, "b", "c2-0"), (2, "u1", 1L, "b", "c2-1")))
-    // The collection predicate prunes DIRECTORIES (PartitionFilters), same
-    // as the rename protocol's layout.
+    // The collection predicate prunes DIRECTORIES (PartitionFilters).
     val pruned = store.tabletRows.filter(col("collection") === 2)
     assert(pruned.collect().map(_.getString(1)).toSeq === Seq("u1", "u1"))
     val explained = pruned.queryExecution.explainString(

@@ -86,15 +86,13 @@ class TemporalPropertiesSpec extends SparkTestBase {
   }
 
   test("store round-trip property: ingest → corrupted snapshots → reindex → " +
-    "snapshot-aware reads (incl. ignore ranges) equal the reference model, " +
-    "under BOTH commit protocols") {
+    "snapshot-aware reads (incl. ignore ranges) equal the reference model") {
     import graft.model.{BlockRef, TabletRowM, WriteRequest}
-    import graft.store.StateStore.{ManifestCommit, RenameCommit}
     implicit val s = spark
-    for (seed <- 30 to 31; proto <- Seq(RenameCommit, ManifestCommit)) {
+    for (seed <- 30 to 31) {
       val rnd = new Random(seed)
       val ms = randomStream(rnd, 30)
-      val store = new graft.store.StateStore(tmpDir(s"prop$seed"), proto)
+      val store = new graft.store.StateStore(tmpDir(s"prop$seed"))
       ms.grouped(10).foreach { batch =>
         store.writeBatch(batch.map(m => WriteRequest(
           m.height, BlockRef(s"b${m.height}", m.height),
@@ -116,7 +114,7 @@ class TemporalPropertiesSpec extends SparkTestBase {
           store.readTabletAt("t1", h, Nil, ignore).collect().toSeq
             .map(r => (r.getString(0), r.getLong(1),
               new String(r.getAs[Array[Byte]](2), "UTF-8")))
-        assert(viaStore(None) === expected, s"seed=$seed proto=$proto h=$h")
+        assert(viaStore(None) === expected, s"seed=$seed h=$h")
         // An ignore window over the middle snapshot must only widen the
         // tail scan, never change the result.
         assert(viaStore(Some((5L, 25L))) === expected, s"seed=$seed h=$h ignored")

@@ -36,9 +36,13 @@ class ToolsSpec extends SparkTestBase {
     assert(new StateStore(root).tabletRows.count() === 10L)
 
     // Reproc: shard the mutations into a fresh store, reconcile, finalize.
+    // The store's table directory is manifest-governed, so the mutations
+    // are exported through the store first.
+    val mutations = s"${tmpDir("tools-mutations")}/rows.parquet"
+    new StateStore(root).tabletRows.write.parquet(mutations)
     val shardOut = tmpDir("tools-shards")
     val root2 = tmpDir("tools-store2")
-    Tools.run(Seq("shard", s"$root/tablet_rows", shardOut, "2"))
+    Tools.run(Seq("shard", mutations, shardOut, "2"))
     Tools.run(Seq("inject-shard", shardOut, "0", root2))
     val status = Tools.run(Seq("shard-status", root2, "2"))
     assert(status.contains("shard-000 height=9 complete") && status.contains("shard-001 height=null missing"))
@@ -229,8 +233,7 @@ class ToolsSpec extends SparkTestBase {
   }
 
   test("head-check verb: clean on a healthy store root and on a bare " +
-    "serving table; a post-publish sidecar owner clobber is reported; a " +
-    "rename-protocol store has nothing to check") {
+    "serving table; a post-publish sidecar owner clobber is reported") {
     implicit val s = spark
 
     // Store root (manifest protocol): both tables cross-check clean.
@@ -268,14 +271,6 @@ class ToolsSpec extends SparkTestBase {
     val report = Tools.run(Seq("head-check", target))
     assert(report.startsWith("HEAD CHECK FAILED:"), report)
     assert(report.contains("overwritten after publish"), report)
-
-    // Rename-protocol store: no pointer, nothing to cross-check.
-    val renameRoot = tmpDir("tools-hc-rename")
-    new StateStore(renameRoot).writeBatch(Seq(WriteRequest(0,
-      BlockRef("b0", 0),
-      Seq(TabletRowM(1, "t1", 0, "a", "v0".getBytes("UTF-8"), false)), Nil)))
-    assert(Tools.run(Seq("head-check", renameRoot))
-      .startsWith("nothing to check: rename-protocol store"))
   }
 
   test("head-check --history: the forensic attribution audit is clean on " +
