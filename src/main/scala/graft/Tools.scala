@@ -12,7 +12,7 @@ import graft.streaming.{BlockArchiveSource, IngestionPipeline}
   * Usage: `sbt "runMain graft.Tools <command> <args...>"`
   *
   *   inject <root> <archiveDir> <ckptDir>     stream a block archive into the store
-  *   shard <mutationsParquet> <out> <n>       reproc-shard: mutations → n shard files
+  *   shard <mutationsParquet|root> <out> <n>  reproc-shard: mutations → n shard files
   *   inject-shard <shardPath> <i> <root>      reproc-inject: replay shard i
   *   inject-dbin <segment> <i> <root> <widths> [startAfter]
   *                                            replay a reference-format
@@ -53,7 +53,14 @@ object Tools {
       q.stop()
       run(Seq("checkpoint", root))
     case "shard" :: mutations :: out :: n :: Nil =>
-      Backfill.run(spark.read.parquet(mutations), out, n.toInt)
+      // A store root's mutations live in a manifest table, read through
+      // the store; anything else is a plain parquet dataset.
+      val storeRows = new org.apache.hadoop.fs.Path(s"$mutations/tablet_rows")
+      val rows =
+        if (storeRows.getFileSystem(spark.sessionState.newHadoopConf()).exists(storeRows))
+          new StateStore(mutations).tabletRows
+        else spark.read.parquet(mutations)
+      Backfill.run(rows, out, n.toInt)
       s"sharded $mutations into $n shards at $out"
     case "inject-shard" :: shardPath :: i :: root :: Nil =>
       Backfill.injectShard(spark, shardPath, i.toInt, new StateStore(root))

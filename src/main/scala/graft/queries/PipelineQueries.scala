@@ -58,23 +58,13 @@ object PipelineQueries {
 
   private[graft] def parquetRowCount(s: SparkSession, path: String): Long = {
     val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    def leafFiles(st: org.apache.hadoop.fs.FileStatus)
-        : Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leafFiles)
-      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-      else Seq.empty
-    val leaves = leafFiles(fs.getFileStatus(root))
+    val leaves = graft.store.Footers.parquetLeaves(conf, path)
     val signature = leaves
       .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
     parquetCountMemo.compute(path, (_, memo) =>
       if (memo != null && memo._1 == signature) memo
-      else (signature, leaves.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum))._2
+      else (signature,
+        graft.store.Footers.read(conf, leaves)(graft.store.Footers.rows).sum))._2
   }
 
   // ---------------------------------------------------------------- hashing

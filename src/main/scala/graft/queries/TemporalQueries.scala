@@ -71,24 +71,19 @@ object TemporalQueries {
     val cacheKey =
       s"${dataStatus.getPath}@${dataStatus.getModificationTime}:${dataStatus.getLen}"
     tsTickCache.computeIfAbsent(cacheKey, (_: String) => {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
       import org.apache.parquet.schema.LogicalTypeAnnotation
-      val reader =
-        ParquetFileReader.open(HadoopInputFile.fromPath(dataStatus.getPath, conf))
-      try {
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        if (!schema.containsField("ts")) 1L
-        else schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000000L
-              case LogicalTypeAnnotation.TimeUnit.MICROS => 1000L
-              case LogicalTypeAnnotation.TimeUnit.NANOS  => 1L
-            }
-          case _ => 1L
-        }
-      } finally reader.close()
+      val schema = graft.store.Footers.read(conf, Seq(dataStatus))(
+        _.getFileMetaData.getSchema).head
+      if (!schema.containsField("ts")) 1L
+      else schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit match {
+            case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000000L
+            case LogicalTypeAnnotation.TimeUnit.MICROS => 1000L
+            case LogicalTypeAnnotation.TimeUnit.NANOS  => 1L
+          }
+        case _ => 1L
+      }
     }: Long)
   }
 

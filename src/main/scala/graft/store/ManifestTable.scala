@@ -1669,13 +1669,11 @@ final class ManifestTable(val tablePath: String, schema: StructType,
         case Some((g, e)) if g == next => e
         case _ =>
           staged.foreach { case (g, _) => dropStagedIfDead(commitId, g) }
-          writeData(df, dataDir)
+          withJobLabel(spark, "commit.write")(writeData(df, dataDir))
           val sized = listDataFilesSized(dataDir)
-          val files = sized.map(_._1)
           if (failBeforePublish)
             throw new IllegalStateException(s"injected crash before publish of $commitId")
-          val e = ManifestEntry(commitId, files, collectStats(dataDir, files),
-            sized.map(_._2))
+          val e = entryOf(commitId, sized)
           staged = Some((next, e))
           e
       }
@@ -1793,13 +1791,11 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     val hadFiles = gen > 0 && cachedEntriesAt(gen).exists(_.files.nonEmpty)
     val next = gen + 1
     val dataDir = s"$tablePath/d-$commitId-g$next"
-    writeData(df, dataDir)
+    withJobLabel(spark, "compact")(writeData(df, dataDir))
     val sized = listDataFilesSized(dataDir)
-    val files = sized.map(_._1)
     if (failBeforePublish)
       throw new IllegalStateException(s"injected crash before publish of $commitId")
-    val entry = ManifestEntry(commitId, files, collectStats(dataDir, files),
-      sized.map(_._2))
+    val entry = entryOf(commitId, sized)
     beforeOwnHook()
     // A replaceAll is contents-preserving by contract (compaction), so
     // its rewrite carries NOTHING fresh — recorded explicitly (Some(Nil),
@@ -1897,13 +1893,11 @@ final class ManifestTable(val tablePath: String, schema: StructType,
             // Base `gen` is frozen while we hold `next`: derive + stage.
             val hadFiles = gen > 0 && cachedEntriesAt(gen).exists(_.files.nonEmpty)
             val dataDir = s"$tablePath/d-$commitId-g$next"
-            writeData(mkDf(), dataDir)
+            withJobLabel(spark, "compact")(writeData(mkDf(), dataDir))
             val sized = listDataFilesSized(dataDir)
-            val files = sized.map(_._1)
             if (failBeforePublish) throw new IllegalStateException(
               s"injected crash before publish of $commitId")
-            val entry = ManifestEntry(commitId, files,
-              collectStats(dataDir, files), sized.map(_._2))
+            val entry = entryOf(commitId, sized)
             // RE-VERIFY ownership (by NONCE) before touching shared
             // metadata: a derivation that outlived the publish lease may
             // have had its reservation taken over (and the generation
@@ -1986,11 +1980,10 @@ final class ManifestTable(val tablePath: String, schema: StructType,
   }
 
   /** Run `body` with adaptive query execution scoped OFF — for the
-    * protocol's METADATA-SIZED statements only (an aggregate collapsing to
-    * one row per file / a single count / a micro-batch-bounded key
-    * collect), where AQE has nothing to re-plan and its per-stage job
-    * materialization only adds driver round-trips — the dominant cost of
-    * a small commit. AQE is a pure optimization for any concurrent
+    * merge's MICRO-BATCH-SIZED statements only (the touched-key collect,
+    * the fresh-side count and write), where AQE has nothing to re-plan
+    * and its per-stage job materialization only adds driver round-trips.
+    * AQE is a pure optimization for any concurrent
     * planner that happens to land inside the window, so the scoping is
     * semantically safe — but the set/restore pair itself must be
     * DEPTH-COUNTED per session ([[ManifestTable.aqeScopeOff]]): two
@@ -2003,52 +1996,51 @@ final class ManifestTable(val tablePath: String, schema: StructType,
   private def withAqeOff[T](body: => T): T =
     ManifestTable.aqeScopeOff(spark)(body)
 
-  /** Per-file min/max of `statsCols` for a just-written commit directory —
-    * the manifest-side data-skipping index (the Delta/Iceberg per-file
-    * stats pattern). One extra column-pruned scan of the files this commit
-    * wrote (footer + statsCols pages only); a production writer folds this
-    * into the write task itself, which is exactly what Delta's commit
-    * protocol does — the stats' CONTENT and placement (inside the manifest,
-    * atomically published with the pointer swap) are the same either way.
-    * Empty when the instance declares no statsCols. */
+  /** The manifest entry of a just-written commit directory's listing. */
+  private def entryOf(commitId: String, sized: Seq[(String, Long)]): ManifestEntry =
+    ManifestEntry(commitId, sized.map(_._1), collectStats(sized), sized.map(_._2))
+
+  /** Per-file min/max of `statsCols` for the files a write just
+    * produced — the manifest-side data-skipping index (the Delta/Iceberg
+    * per-file stats pattern), taken from the files' parquet footers: no
+    * Spark statement, no scan of the data. Row-group statistics merge in
+    * the manifest's own order (numeric for long/int, unsigned bytes for
+    * strings — the order of Spark's `min`/`max`), so the bounds equal a
+    * `groupBy(input_file_name).agg(min, max)` over the same files. A
+    * column with no non-null value in a file gets no bounds there (never
+    * pruned on it), and so does one a row group carries no statistics
+    * for (parquet drops min/max past 4 KiB): an unknown bound prunes
+    * nothing. Empty when the instance declares no statsCols. */
   private def collectStats(
-      dataDir: String,
-      files: Seq[String]): Seq[Map[String, (StatVal, StatVal)]] = {
-    if (statsCols.isEmpty || files.isEmpty)
-      return files.map(_ => Map.empty[String, (StatVal, StatVal)])
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val base = partitionCol match {
-      case Some(_) =>
-        spark.read.option("basePath", dataDir).schema(schema).parquet(dataDir)
-      case None => spark.read.schema(schema).parquet(dataDir)
+      sized: Seq[(String, Long)]): Seq[Map[String, (StatVal, StatVal)]] = {
+    if (statsCols.isEmpty) return sized.map(_ => Map.empty[String, (StatVal, StatVal)])
+    import scala.jdk.CollectionConverters._
+    val (fs, root) = fsOf(tablePath)
+    val base = fs.makeQualified(root)
+    val statuses = sized.map { case (f, len) =>
+      new FileStatus(len, false, 1, 0L, 0L, new Path(base, f))
     }
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    // AQE scoped OFF for this one statement: its output is one row per
-    // file at ANY scale (the partial agg collapses everything map-side),
-    // so adaptive re-planning has nothing to optimize — it only splits
-    // the statement into one Spark job per stage, and the extra driver
-    // round-trip is the dominant cost of a small commit (measured: 3
-    // jobs per commit, 2 of them this read-back).
-    val rows = withAqeOff {
-      base
-        .groupBy(input_file_name().as("_file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-    }
-    val rootPrefix = fsOf(tablePath)._2.toUri.getPath
-    val byRel: Map[String, Map[String, (StatVal, StatVal)]] = rows.map { r =>
-      val rel = new Path(new java.net.URI(r.getAs[String]("_file")))
-        .toUri.getPath.stripPrefix(rootPrefix).stripPrefix("/")
-      val bounds = statsCols.flatMap { c =>
-        (Option(r.getAs[Any](s"min_$c")), Option(r.getAs[Any](s"max_$c"))) match {
-          case (Some(lo), Some(hi)) => Some(c -> (toStatVal(lo), toStatVal(hi)))
-          case _ => None // all-null column in this file: no bounds, never pruned on it
+    Footers.read(spark.sessionState.newHadoopConf(), statuses) { footer =>
+      val groups = footer.getBlocks.asScala.toSeq
+      statsCols.flatMap { c =>
+        // Per row group: Some(Some(bounds)), Some(None) when every value
+        // is null, None when the group has no statistics for `c`.
+        val perGroup = groups.map { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == c).flatMap { ch =>
+            val st = ch.getStatistics
+            if (st.hasNonNullValue)
+              Some(Some((toStatVal(st.genericGetMin), toStatVal(st.genericGetMax))))
+            else if (st.isNumNullsSet && st.getNumNulls == ch.getValueCount) Some(None)
+            else None
+          }
         }
+        if (perGroup.contains(None)) None
+        else perGroup.flatten.flatten.reduceOption { (a, b) =>
+          (if (cmp(b._1, a._1) < 0) b._1 else a._1,
+            if (cmp(b._2, a._2) > 0) b._2 else a._2)
+        }.map(c -> _)
       }.toMap
-      rel -> bounds
-    }.toMap
-    files.map(f => byRel.getOrElse(f, Map.empty))
+    }
   }
 
   // ----------------------------------------------------------------- read
@@ -2302,13 +2294,13 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     // +1: a Long.MaxValue "disable the cap" override must not overflow
     // into limit(0) and silently drop the batch.
     val maxKeys = math.min(maxTouchedKeys, Int.MaxValue.toLong - 1)
-    val keyRows = withAqeOff {
+    val keyRows = withJobLabel(spark, "merge.touchedKeys")(withAqeOff {
       // Micro-batch-bounded by the enforced contract below — AQE's
       // per-stage jobs only add round-trips to a statement this small.
       import org.apache.spark.sql.functions.col
       updates.select(keyCols.map(col): _*).distinct()
         .limit((maxKeys + 1).toInt).collect()
-    }
+    })
     if (keyRows.length > maxKeys) throw new IllegalArgumentException(
       s"merge '$commitId' touches more than $maxKeys distinct keys — the " +
         "touched-key set is collected to the driver and must stay " +
@@ -2657,7 +2649,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
 
     val next = head + 1
     val dataDir = s"$tablePath/d-$commitId-g$next"
-    val (rwFiles, allSized) =
+    val (rwFiles, allSized) = withJobLabel(spark, "merge.derive") {
       if (matchedFiles.isEmpty) {
         // Nothing rewritten (touched keys matched no existing file): the
         // generation is a plain append of the update batch — one write,
@@ -2717,14 +2709,12 @@ final class ManifestTable(val tablePath: String, schema: StructType,
           (rw, listDataFilesSized(dataDir))
         } finally m.unpersist(blocking = false)
       }
-    val allFiles = allSized.map(_._1)
-    val freshFiles = allFiles.filterNot(rwFiles.toSet)
+    }
+    val freshFiles = allSized.map(_._1).filterNot(rwFiles.toSet)
     if (failBeforePublish)
       throw new IllegalStateException(s"injected crash before publish of $commitId")
-    val mergedEntry = ManifestEntry(commitId, allFiles,
-      collectStats(dataDir, allFiles), allSized.map(_._2))
     StagedMerge(head, headEntries.iterator.flatMap(_.files).toSet,
-      next, matchedFiles, keyTuples, mergedEntry, freshFiles)
+      next, matchedFiles, keyTuples, entryOf(commitId, allSized), freshFiles)
   }
 
   /** Publish a staged merge attempt as generation `next` on top of
@@ -3082,6 +3072,24 @@ object ManifestTable {
     }
   }
 
+  /** Run `body` with the calling thread's Spark local property `key` set
+    * to `value` (every job `body` launches carries it), restoring the
+    * previous value after. */
+  private[graft] def withLocalProperty[T](spark: SparkSession, key: String,
+      value: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, value)
+    try body finally sc.setLocalProperty(key, prev)
+  }
+
+  /** Run `body` with `label` as the `spark.job.description` of every job
+    * it launches: the phase name an operator or profiler groups jobs by
+    * (`commit.write`, `merge.derive`, …). */
+  private[graft] def withJobLabel[T](spark: SparkSession, label: String)(
+      body: => T): T =
+    withLocalProperty(spark, "spark.job.description", label)(body)
+
   /** How long commit/merge/replaceAllRetrying keep retrying lost
     * generation races before failing loudly. TIME-based, not
     * attempt-based, because the thing a blocked writer must outlive is a
@@ -3313,6 +3321,7 @@ object ManifestTable {
     case l: Long => LongVal(l)
     case i: Int => LongVal(i.toLong)
     case s: String => BytesVal(s.getBytes("UTF-8"))
+    case b: org.apache.parquet.io.api.Binary => BytesVal(b.getBytes)
     case other => sys.error(s"unsupported stats value ${other.getClass}")
   }
 

@@ -493,21 +493,22 @@ final class StateStore(
     false
   }
 
-  /** Append one tablet snapshot (the reference's TabletIndex write,
-    * indexing.go:100–147): `index` carries (primary_key, height) as built by
-    * [[graft.snapshot.Snapshots.buildTabletIndex]]. Deterministic commit
-    * name per (tablet, height): a crash-replayed index build skips. */
   private def tabletHashOf(tabletId: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(tabletId.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
+  /** Append one tablet snapshot (the reference's TabletIndex write,
+    * indexing.go:100–147): `index` carries (primary_key, height) as built by
+    * [[graft.snapshot.Snapshots.buildTabletIndex]]. Deterministic commit
+    * name per (tablet, height): a crash-replayed index build skips.
+    * Returns the snapshot's directory, written now or by an earlier build. */
   def writeTabletSnapshot(
       index: DataFrame,
       tabletId: String,
       atHeight: Long,
       squelchCount: Long,
-      collection: Int = 0): Unit = {
-    val tabletHash = tabletHashOf(tabletId)
+      collection: Int = 0): String = {
+    val dir = f"s-$collection-${tabletHashOf(tabletId)}-$atHeight%017d"
     atomicAppend(
       index.select(
         lit(collection).as("collection"),
@@ -515,7 +516,8 @@ final class StateStore(
         lit(atHeight).as("at_height"),
         lit(squelchCount).as("squelch_count"),
         col("primary_key"), col("height")),
-      snapshotsPath, f"s-$collection-$tabletHash-$atHeight%017d")
+      snapshotsPath, dir)
+    s"$snapshotsPath/$dir"
   }
 
   /** Most recent snapshot of `tabletId` at or below `maxHeight`:

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model._
 import graft.read.TemporalReads
-import graft.store.StateStore
+import graft.store.{Footers, StateStore}
+import graft.store.ManifestTable.{withJobLabel, withLocalProperty}
 
 /** A raw block as it arrives from the stream: payload plus fork metadata.
   * `step` mirrors bstream's New/Irreversible steps (pipeline.go:110–137). */
@@ -78,12 +79,12 @@ final class IngestionPipeline(
     * (pipeline.go:133–137, store/kv/store.go:359–450). */
   private[graft] def commitBatch(batch: Dataset[StreamedBlock], batchId: Long): Unit = {
     val bf = blockFilter // local val: don't serialize `this` into closures
-    // Pin ONE evaluation of the batch for all four consumers below
-    // (metadata collect, StepNew payload collect, tablet-row write,
-    // singlet-entry write): without it each consumer re-evaluates the
-    // source, so a nondeterministic blockFilter or source re-read could
-    // commit rows that disagree with the checkpoint/metadata — and even
-    // the good case scans the source 4x per batch.
+    // Pin ONE evaluation of the batch for all three consumers below
+    // (metadata + StepNew payload collect, tablet-row write, singlet-entry
+    // write): without it each consumer re-evaluates the source, so a
+    // nondeterministic blockFilter or source re-read could commit rows
+    // that disagree with the checkpoint/metadata — and even the good case
+    // scans the source 3x per batch.
     //
     // FULL-ROW dedup before anything else: an at-least-once source — the
     // catch-up ∪ live seam of [[JoiningSource.joined]], a redelivering
@@ -101,47 +102,44 @@ final class IngestionPipeline(
   private def commitPinned(filtered: Dataset[StreamedBlock]): Unit = {
     import spark.implicits._
 
-    // (1) Metadata-only collect — tiny: per block, its fork linkage plus
-    // per-tablet mutation COUNTS and the singlet-entry count (the index
-    // heuristic and write-skipping need numbers, not payloads).
-    val meta = filtered
-      .map(b => (b.id, b.parentId, b.num, b.step,
-        b.tabletRows.groupBy(r => (r.tabletId, r.collection))
-          .map { case ((t, c), rs) => (t, c, rs.size.toLong) }.toSeq,
-        b.singletEntries.size.toLong))
-      .collect()
-      .sortBy { case (_, _, num, step, _, _) => (num, step != StreamedBlock.StepNew) }
+    // (1) ONE collect — per block, its fork linkage plus per-tablet
+    // mutation COUNTS and the singlet-entry count (the index heuristic and
+    // write-skipping need numbers, not payloads), and the payload of
+    // reversible (`StepNew`) blocks only: bounded by the fork window (the
+    // reference caps the reversible segment at ~300 blocks,
+    // pipeline.go:110), it feeds the driver-side ForkDB for speculative
+    // overlays. Irreversible payloads are NEVER collected.
+    val meta = withJobLabel(spark, "pipeline.meta") {
+      filtered
+        .map(b => (b.id, b.parentId, b.num, b.step,
+          b.tabletRows.groupBy(r => (r.tabletId, r.collection))
+            .map { case ((t, c), rs) => (t, c, rs.size.toLong) }.toSeq,
+          b.singletEntries.size.toLong,
+          Option(b).filter(_.step == StreamedBlock.StepNew)))
+        .collect()
+        .sortBy { case (_, _, num, step, _, _, _) => (num, step != StreamedBlock.StepNew) }
+    }
     if (meta.isEmpty) return
     meta.foreach {
-      case (_, _, _, step, _, _)
+      case (_, _, _, step, _, _, _)
           if step != StreamedBlock.StepNew && step != StreamedBlock.StepIrreversible =>
         throw new IllegalArgumentException(s"unknown step: $step")
       case _ => ()
     }
-
-    // (2) Reversible payloads — bounded by the fork window (the reference
-    // caps the reversible segment at ~300 blocks, pipeline.go:110) — feed
-    // the driver-side ForkDB for speculative overlays. Irreversible
-    // payloads are NEVER collected.
-    val newPayloads: Map[String, StreamedBlock] =
-      if (meta.exists(_._4 == StreamedBlock.StepNew))
-        filtered.filter(_.step == StreamedBlock.StepNew).collect().map(b => b.id -> b).toMap
-      else Map.empty
     meta.foreach {
-      case (id, parentId, num, StreamedBlock.StepNew, _, _) =>
-        val b = newPayloads(id)
+      case (id, parentId, num, _, _, _, Some(b)) =>
         forkDB.addLink(BlockRef(id, num), parentId,
           WriteRequest(num, BlockRef(id, num), b.tabletRows, b.singletEntries))
-      case (id, _, num, _, _, _) =>
+      case (id, _, num, _, _, _, None) =>
         forkDB.moveLIB(BlockRef(id, num))
     }
 
-    // (3) Irreversible data, written distributed. Idempotent replay: drop
+    // (2) Irreversible data, written distributed. Idempotent replay: drop
     // heights already checkpointed (store.checkpoint is O(1) after the
     // first call — single-writer cache warmed from the durable log).
     val cp = store.checkpoint(StateStore.GlobalCheckpointKey).map(_.height).getOrElse(-1L)
     val irrMeta = meta
-      .filter { case (_, _, num, step, _, _) => step == StreamedBlock.StepIrreversible && num > cp }
+      .filter { case (_, _, num, step, _, _, _) => step == StreamedBlock.StepIrreversible && num > cp }
     if (irrMeta.isEmpty) return
     val (lo, hi) = (irrMeta.head._3, irrMeta.last._3)
     require(
@@ -169,10 +167,10 @@ final class IngestionPipeline(
       store.writeSingletEntries(
         irr.flatMap(_.singletEntries).toDF(StateStore.singletEntryCols: _*), batchDir)
     // Checkpoint last — the durability barrier (write.go:40–72).
-    val (headId, _, headNum, _, _, _) = irrMeta.last
+    val (headId, _, headNum, _, _, _, _) = irrMeta.last
     store.writeCheckpoint(Checkpoint(StateStore.GlobalCheckpointKey, hi, headId, headNum))
 
-    // (4) Index maintenance: bump per-tablet counters from the metadata
+    // (3) Index maintenance: bump per-tablet counters from the metadata
     // counts and snapshot any tablet past the trigger heuristic, pinned at
     // the batch head height (so snapshot ∪ tail reads stay consistent).
     tabletCounts.foreach { case (tablet, coll, n) =>
@@ -207,7 +205,7 @@ final class IngestionPipeline(
     else indexCache.tabletsToIndex().take(maxIndexBuildsPerBatch)
       .foreach(t => buildIndexFor(t, collectionAt(t), hi))
 
-    // (5) Periodic head consistency probe (time-gated; two small reads
+    // (4) Periodic head consistency probe (time-gated; two small reads
     // per manifest table per interval) — the operational detector for
     // stale-writer clobber damage on a store that does not honor the
     // conditional-create contract.
@@ -311,7 +309,12 @@ final class IngestionPipeline(
   }
 
   private def buildIndexForInner(tablet: String, coll: Int, hi: Long): Unit = {
-    store.latestTabletSnapshotMeta(tablet, hi) match {
+    // The new snapshot's row count comes from the footers of the
+    // directory its write produced (or found already written): no count
+    // job, and the index DataFrame has the write as its only consumer.
+    def written(dir: String): Long =
+      Footers.rowCount(spark.sessionState.newHadoopConf(), dir)
+    withJobLabel(spark, "index.lookup")(store.latestTabletSnapshotMeta(tablet, hi)) match {
       case Some((prevH, prevSquelch, prevIdx)) if prevH < hi =>
         // Steady state — INCREMENTAL (indexing.go:265–271): seed from the
         // previous snapshot and scan only the tail (prevH, hi]. Cost is
@@ -326,19 +329,18 @@ final class IngestionPipeline(
             col("tablet_id") === lit(tablet) &&
               col("height") > lit(prevH) && col("height") <= lit(hi)).persist()
         try {
-          val tailCount = tail.count()
-          val idx = graft.snapshot.Snapshots
-            .buildTabletIndexIncremental(tail, prevIdx).persist()
-          try {
-            store.writeTabletSnapshot(idx, tablet, hi, prevSquelch + tailCount, coll)
-            indexCache.recordIndexed(tablet, idx.count(), Some(tailCount))
-          } finally idx.unpersist()
+          val tailCount = withJobLabel(spark, "index.tail")(tail.count())
+          val idx = graft.snapshot.Snapshots.buildTabletIndexIncremental(tail, prevIdx)
+          val dir = withJobLabel(spark, "index.write")(
+            store.writeTabletSnapshot(idx, tablet, hi, prevSquelch + tailCount, coll))
+          indexCache.recordIndexed(tablet, written(dir), Some(tailCount))
         } finally tail.unpersist()
       case Some((_, _, prevIdx)) =>
         // Already indexed at exactly `hi` (crash-replayed batch): the
         // snapshot write would be a deterministic skip — just resync the
         // cache counters.
-        indexCache.recordIndexed(tablet, prevIdx.count())
+        indexCache.recordIndexed(tablet,
+          withJobLabel(spark, "index.lookup")(prevIdx.count()))
       case None =>
         // First index of this tablet: one full-history build, with the
         // scanned slice pinned so the squelch count is not a second scan.
@@ -348,13 +350,11 @@ final class IngestionPipeline(
           .filter(
             col("tablet_id") === lit(tablet) && col("height") <= lit(hi)).persist()
         try {
-          val squelch = scoped.count()
-          val idx = graft.snapshot.Snapshots
-            .buildTabletIndex(scoped, tablet, hi).persist()
-          try {
-            store.writeTabletSnapshot(idx, tablet, hi, squelch, coll)
-            indexCache.recordIndexed(tablet, idx.count(), Some(squelch))
-          } finally idx.unpersist()
+          val squelch = withJobLabel(spark, "index.tail")(scoped.count())
+          val idx = graft.snapshot.Snapshots.buildTabletIndex(scoped, tablet, hi)
+          val dir = withJobLabel(spark, "index.write")(
+            store.writeTabletSnapshot(idx, tablet, hi, squelch, coll))
+          indexCache.recordIndexed(tablet, written(dir), Some(squelch))
         } finally scoped.unpersist()
     }
   }
@@ -618,10 +618,6 @@ object IngestionPipeline {
     * the query's jobs to the pool — the standard way to isolate
     * co-located streaming queries under `spark.scheduler.mode=FAIR`
     * (under the FIFO default the property is ignored). */
-  private[graft] def inPool[T](spark: SparkSession, pool: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.scheduler.pool")
-    sc.setLocalProperty("spark.scheduler.pool", pool)
-    try body finally sc.setLocalProperty("spark.scheduler.pool", prev)
-  }
+  private[graft] def inPool[T](spark: SparkSession, pool: String)(body: => T): T =
+    withLocalProperty(spark, "spark.scheduler.pool", pool)(body)
 }

@@ -121,6 +121,87 @@ class ManifestStatsSpec extends SparkTestBase {
     assert(rowSet(t.read()) === Set(("t1", 1L, "a"), ("t2", 10L, "b")))
   }
 
+
+  test("footer bounds equal a groupBy(input_file_name) min/max over the " +
+    "same files, after commit, replaceAll and merge: byte-order traps, " +
+    "empty string, mixed and all-null columns, an int column, several " +
+    "row groups per file") {
+    implicit val s = spark
+    import org.apache.spark.sql.types.{BooleanType, IntegerType}
+    val wide = StructType(Seq(
+      StructField("id", StringType, nullable = false),
+      StructField("k", StringType, nullable = false),
+      StructField("h", LongType, nullable = false),
+      StructField("i", IntegerType, nullable = false),
+      StructField("n", StringType, nullable = true),
+      StructField("z", StringType, nullable = true),
+      StructField("del", BooleanType, nullable = false)))
+    val statsCols = Seq("id", "k", "h", "i", "n", "z")
+    val t = new ManifestTable(tmpDir("mstats-footer"), wide, statsCols = statsCols)
+    // "a" < "é" and U+FFFF < U+10000 as unsigned UTF-8 bytes; signed
+    // bytes (or UTF-16 units) order each pair the other way.
+    val traps = Seq("a", "é", "￿", "𐀀", "")
+    def frame(ids: Range, h0: Long, files: Int): DataFrame = {
+      val rows = ids.map { j =>
+        Row(f"r$j%04d", traps(j % traps.size), h0 - j, (j * 37) % 101 - 50,
+          // n: null for a whole leading row group, then mixed.
+          if (j % 300 < 70 || j % 3 == 0) null else s"n$j", null, false)
+      }
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, files), wide)
+    }
+    def sqlBounds(): Map[String, Map[String, (Any, Any)]] = {
+      val rootPath = new org.apache.hadoop.fs.Path(t.tablePath).toUri.getPath
+      val aggs = statsCols.flatMap(c => Seq(min(col(c)), max(col(c))))
+      t.read().groupBy(input_file_name().as("f")).agg(aggs.head, aggs.tail: _*)
+        .collect().map { r =>
+          val rel = new java.net.URI(r.getString(0)).getPath
+            .stripPrefix(rootPath).stripPrefix("/")
+          rel -> statsCols.zipWithIndex.flatMap { case (c, i) =>
+            Option(r.get(1 + 2 * i)).map(lo => c -> (lo, r.get(2 + 2 * i)))
+          }.toMap
+        }.toMap
+    }
+    def manifestBounds(): Map[String, Map[String, (Any, Any)]] = {
+      def plain(v: ManifestTable.StatVal): Any = v match {
+        case ManifestTable.LongVal(l) => l
+        case ManifestTable.BytesVal(b) => new String(b, "UTF-8")
+      }
+      t.manifestEntriesFull(t.currentGeneration().get).flatMap(e =>
+        e.files.zip(e.stats)).map { case (f, b) =>
+          f -> b.map { case (c, (lo, hi)) => c -> (plain(lo), plain(hi)) }
+        }.toMap
+    }
+    def sameBounds(step: String): Unit = {
+      val sql = sqlBounds().map { case (f, b) =>
+        f -> b.map { case (c, (lo, hi)) => c -> ((lo, hi) match {
+          case (a: Int, b: Int) => (a.toLong, b.toLong)
+          case other => other
+        }) }
+      }
+      val got = manifestBounds()
+      assert(got.keySet === sql.keySet, step)
+      for ((f, b) <- got) assert(b === sql(f), s"$step: $f")
+      assert(got.values.forall(b => !b.contains("z")), s"$step: all-null z has no bounds")
+    }
+    spark.conf.set("parquet.block.row.count.limit", "64")
+    try {
+      t.commit(frame(0 until 300, 10000L, 2), "c0")
+      t.commit(frame(300 until 420, 20000L, 1), "c1")
+      val groups = graft.store.Footers.read(
+        spark.sessionState.newHadoopConf(),
+        graft.store.Footers.parquetLeaves(spark.sessionState.newHadoopConf(),
+          t.tablePath))(_.getBlocks.size)
+      assert(groups.forall(_ > 1), s"row groups per file: $groups")
+      sameBounds("commit")
+      t.replaceAll(t.read().repartition(3), "compact")
+      sameBounds("replaceAll")
+      val upd = frame(400 until 460, 30000L, 1)
+      t.merge(upd, Seq("id"), "h", "del", "m0")
+      sameBounds("merge")
+      assert(t.read().count() === 460L)
+    } finally spark.conf.unset("parquet.block.row.count.limit")
+  }
+
   // ------------------------------------------------------------ StateStore
 
   private def req(h: Long, rows: (String, String, String)*): WriteRequest =

@@ -57,6 +57,32 @@ class ToolsSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { Tools.run(Seq("bogus")) }
   }
 
+  test("shard reads a live store root through its manifest: published " +
+    "rows only, across several commit directories and a crashed attempt") {
+    implicit val s = spark
+    val root = tmpDir("tools-shard-root")
+    val store = new StateStore(root)
+    def req(h: Long, pk: String) = WriteRequest(h, BlockRef(s"blk-$h", h),
+      Seq(TabletRowM(1, "t1", h, pk, s"v$h".getBytes("UTF-8"), false)), Nil)
+    (0L to 3L).foreach(h => store.writeBatch(Seq(req(h, s"pk${h % 2}"))))
+    // An unpublished attempt directory: its rows must not be sharded.
+    val table = store.manifestTableFor(store.tabletRowsPath)
+    table.failBeforePublish = true
+    intercept[IllegalStateException](store.writeBatch(Seq(req(4L, "crashed"))))
+    table.failBeforePublish = false
+
+    val shardOut = tmpDir("tools-shard-out")
+    val root2 = tmpDir("tools-shard-root2")
+    assert(Tools.run(Seq("shard", root, shardOut, "2")) ===
+      s"sharded $root into 2 shards at $shardOut")
+    Seq("0", "1").foreach(i => Tools.run(Seq("inject-shard", shardOut, i, root2)))
+    Tools.run(Seq("finalize-sharding", root2, "2"))
+    def rows(st: StateStore) = st.tabletRows.collect()
+      .map(r => (r.getAs[String]("primary_key"), r.getAs[Long]("height"))).toSet
+    assert(rows(new StateStore(root2)) === rows(new StateStore(root)))
+    assert(rows(new StateStore(root2)).size === 4)
+  }
+
   test("manifest time-travel verbs: table-generations lists the commit " +
     "history; read-tablet-at-gen reads the state as of an older generation") {
     implicit val s = spark
