@@ -13,12 +13,10 @@ import scala.jdk.CollectionConverters._
 /** THE driver-side parquet footer reader: row counts, per-file column
   * bounds and schema probes all open footers through [[read]], never a
   * Spark job. A footer is one small ranged read at the end of the file;
-  * past [[ParallelAbove]] files they are opened on a fixed pool, so a
-  * compaction-sized listing is a few rounds of parallel reads rather than
-  * a serial chain of round trips. */
+  * every call opens its files on one fixed pool, so a compaction-sized
+  * listing is a few rounds of parallel reads rather than a serial chain
+  * of round trips. */
 private[graft] object Footers {
-
-  private val ParallelAbove = 4
 
   private lazy val pool = ExecutionContext.fromExecutorService(
     java.util.concurrent.Executors.newFixedThreadPool(8, (r: Runnable) => {
@@ -35,11 +33,8 @@ private[graft] object Footers {
       val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       try f(r.getFooter) finally r.close()
     }
-    if (files.size <= ParallelAbove) files.map(one)
-    else {
-      implicit val ec: ExecutionContext = pool
-      Await.result(Future.traverse(files)(st => Future(one(st))), Duration.Inf)
-    }
+    implicit val ec: ExecutionContext = pool
+    Await.result(Future.traverse(files)(st => Future(one(st))), Duration.Inf)
   }
 
   def rows(footer: ParquetMetadata): Long =

@@ -3083,12 +3083,18 @@ object ManifestTable {
     try body finally sc.setLocalProperty(key, prev)
   }
 
-  /** Run `body` with `label` as the `spark.job.description` of every job
-    * it launches: the phase name an operator or profiler groups jobs by
-    * (`commit.write`, `merge.derive`, …). */
+  /** Run `body` with `label` leading the `spark.job.description` of every
+    * job it launches: the phase name an operator or profiler groups jobs
+    * by (`commit.write`, `merge.derive`, …). A description already set —
+    * a streaming micro-batch's `id = …, batch = N` — is kept after the
+    * label (`label | previous`), so the jobs stay attributed to it. */
   private[graft] def withJobLabel[T](spark: SparkSession, label: String)(
-      body: => T): T =
-    withLocalProperty(spark, "spark.job.description", label)(body)
+      body: => T): T = {
+    val key = "spark.job.description"
+    val prev = spark.sparkContext.getLocalProperty(key)
+    withLocalProperty(spark, key,
+      if (prev == null) label else s"$label | $prev")(body)
+  }
 
   /** How long commit/merge/replaceAllRetrying keep retrying lost
     * generation races before failing loudly. TIME-based, not

@@ -15,25 +15,27 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *   - a merge runs its touched-key collect and its derivation only;
   *
   * and every one of those jobs carries its phase label
-  * (`spark.job.description`).
+  * (`spark.job.description`), ahead of any description the caller had set.
   */
 class CommitJobsSpec extends SparkTestBase {
 
   private val Unlabelled = "unlabelled"
 
   /** The description of every job `body` launched on this thread, in
-    * job-id order (jobs outside any label carry [[Unlabelled]]). */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    * job-id order (jobs with no description carry [[Unlabelled]]), with
+    * `outer` as the description in force around `body`. */
+  private def jobsOf[T](body: => T, outer: String = null): (T, Seq[String]) = {
     val group = s"commit-jobs-spec-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach(p => jobs.put(e.jobId, p.getProperty("spark.job.description")))
+          .foreach(p => jobs.put(e.jobId,
+            Option(p.getProperty("spark.job.description")).getOrElse(Unlabelled)))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(l)
-    sc.setJobGroup(group, Unlabelled)
+    sc.setJobGroup(group, outer)
     try {
       val out = body
       org.apache.spark.graftspec.BusDrain.drain(sc)
@@ -60,6 +62,15 @@ class CommitJobsSpec extends SparkTestBase {
     assert(commit.nonEmpty && commit.size === plain.size,
       s"commit ran $commit; the bare write ran $plain")
     assert(commit.forall(_ == "commit.write"), commit)
+    // Inside a streaming micro-batch the batch's own description stays on
+    // the jobs, after the label, and is back in force once the commit ends.
+    val batchDesc = "id = q, batch = 7"
+    val (after, inBatch) = jobsOf({
+      t.commit(frame, "c1")
+      spark.sparkContext.getLocalProperty("spark.job.description")
+    }, outer = batchDesc)
+    assert(inBatch.nonEmpty && inBatch.forall(_ == s"commit.write | $batchDesc"), inBatch)
+    assert(after === batchDesc)
     // The bounds still land in the manifest.
     assert(t.pruneCounts(Seq(ManifestTable.StatsEq("primary_key", "absent")))._1 === 0)
   }

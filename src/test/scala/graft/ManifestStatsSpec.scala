@@ -202,6 +202,37 @@ class ManifestStatsSpec extends SparkTestBase {
     } finally spark.conf.unset("parquet.block.row.count.limit")
   }
 
+  test("a column parquet wrote no min/max for (a value past its 4 KiB " +
+    "statistics limit) leaves the file without bounds on it, and pruned " +
+    "reads still return the file's rows") {
+    implicit val s = spark
+    val t = new ManifestTable(tmpDir("mstats-big"), schema,
+      statsCols = Seq("tablet_id", "height", "primary_key"))
+    // min + max of primary_key in c1's file come to over 4 KiB, so its
+    // footer carries no min/max for that column. A SQL min/max read-back
+    // would bound it; the footer-derived stats leave it unbounded, which
+    // only means it is never pruned on primary_key.
+    val big = "m" + "x" * 5000
+    t.commit(df(("t1", 1L, "a"), ("t1", 2L, "b")).coalesce(1), "c0")
+    t.commit(df(("t2", 3L, big), ("t2", 4L, "n")).coalesce(1), "c1")
+    def plain(v: ManifestTable.StatVal): Any = v match {
+      case ManifestTable.LongVal(l) => l
+      case ManifestTable.BytesVal(b) => new String(b, "UTF-8")
+    }
+    val bounds = t.manifestEntriesFull(t.currentGeneration().get)
+      .flatMap(_.stats).map(_.map { case (c, (lo, hi)) => c -> (plain(lo), plain(hi)) })
+    assert(bounds.toSet === Set(
+      Map("tablet_id" -> ("t1", "t1"), "height" -> (1L, 2L), "primary_key" -> ("a", "b")),
+      Map("tablet_id" -> ("t2", "t2"), "height" -> (3L, 4L))), bounds)
+    for (k <- Seq(big, "n")) {
+      assert(rowSet(t.readPruned(Seq(StatsEq("primary_key", k)))
+        .filter(col("primary_key") === k)) === rowSet(df(("t2", if (k == big) 3L else 4L, k))))
+      assert(t.pruneCounts(Seq(StatsEq("primary_key", k))) === ((1, 2)), k)
+    }
+    // The other columns of that file still prune.
+    assert(t.pruneCounts(Seq(StatsEq("tablet_id", "t1"))) === ((1, 2)))
+  }
+
   // ------------------------------------------------------------ StateStore
 
   private def req(h: Long, rows: (String, String, String)*): WriteRequest =
