@@ -1980,8 +1980,9 @@ final class ManifestTable(val tablePath: String, schema: StructType,
   }
 
   /** Run `body` with adaptive query execution scoped OFF — for the
-    * merge's MICRO-BATCH-SIZED statements only (the touched-key collect,
-    * the fresh-side count and write), where AQE has nothing to re-plan
+    * merge's MICRO-BATCH-SIZED statements on this table's session only
+    * (the fresh-side count and write; the touched-key collect scopes the
+    * updates' own session), where AQE has nothing to re-plan
     * and its per-stage job materialization only adds driver round-trips.
     * AQE is a pure optimization for any concurrent
     * planner that happens to land inside the window, so the scoping is
@@ -2294,13 +2295,19 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     // +1: a Long.MaxValue "disable the cap" override must not overflow
     // into limit(0) and silently drop the batch.
     val maxKeys = math.min(maxTouchedKeys, Int.MaxValue.toLong - 1)
-    val keyRows = withJobLabel(spark, "merge.touchedKeys")(withAqeOff {
-      // Micro-batch-bounded by the enforced contract below — AQE's
-      // per-stage jobs only add round-trips to a statement this small.
-      import org.apache.spark.sql.functions.col
-      updates.select(keyCols.map(col): _*).distinct()
-        .limit((maxKeys + 1).toInt).collect()
-    })
+    // Micro-batch-bounded by the enforced contract below — AQE's
+    // per-stage jobs only add round-trips to a statement this small. The
+    // scope is on the session that plans the collect, the updates' own: a
+    // streaming batch's is a clone of the table's, and scoping the table's
+    // session would leave the collect adaptive while turning AQE off for
+    // whatever else plans there meanwhile.
+    val keyRows = withJobLabel(spark, "merge.touchedKeys") {
+      ManifestTable.aqeScopeOff(updates.sparkSession) {
+        import org.apache.spark.sql.functions.col
+        updates.select(keyCols.map(col): _*).distinct()
+          .limit((maxKeys + 1).toInt).collect()
+      }
+    }
     if (keyRows.length > maxKeys) throw new IllegalArgumentException(
       s"merge '$commitId' touches more than $maxKeys distinct keys — the " +
         "touched-key set is collected to the driver and must stay " +

@@ -1,7 +1,7 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.model._
@@ -38,9 +38,11 @@ import graft.model._
   *
   * Staged rename is only the checkpoint log's and the snapshot table's
   * commit: an append is written under `_staging/<uuid>` (invisible to
-  * readers) and renamed into the table under a deterministic name, and a
-  * whole-table rewrite (checkpoint compaction, reindex) is the crash-safe
-  * swap of [[rewriteTable]] / [[recoverSwap]].
+  * readers) and renamed into the table under a deterministic name. The
+  * snapshot table keeps one directory per snapshot, always (a reindex
+  * replaces directories one at a time); the checkpoint log's whole-table
+  * rewrite (compaction) is the crash-safe swap of [[rewriteTable]] /
+  * [[recoverSwap]].
   *
   * All filesystem operations go through Hadoop's FileSystem API, so the
   * store works unchanged against hdfs:// or s3a:// roots.
@@ -92,7 +94,7 @@ final class StateStore(
   // and again at the head of every [[rewriteTable]]. Readers never rename —
   // a reader racing a live rewrite between its two renames could otherwise
   // restore `path.old` over the writer's about-to-promote replacement.
-  Seq(checkpointsPath, snapshotsPath).foreach(recoverSwap)
+  recoverSwap(checkpointsPath)
 
   // ------------------------------------------------------------------
   // Filesystem plumbing (Hadoop FS — never java.io.File, which silently
@@ -139,20 +141,19 @@ final class StateStore(
     }
   }
 
-  /** Swap-rewrite a whole checkpoint or snapshot table (compaction,
-    * reindex, prune): write the replacement, move the old table aside,
+  /** Swap-rewrite the whole checkpoint log (compaction, migration,
+    * shard-checkpoint removal): write the replacement, move the old table aside,
     * promote, then delete the old copy. A crash at any point leaves a
     * COMPLETE table either at `path` or at `path.old`; [[recoverSwap]]
     * (run at store construction and here — never by a reader) finishes an
     * interrupted swap. `replacement` is by-name: it is planned AFTER that
     * recovery, so a table found moved aside is rewritten from its
     * restored rows, not read as empty. */
-  private def rewriteTable(
-      path: String, replacement: => DataFrame, format: String = "parquet"): Unit = {
+  private def rewriteTable(path: String, replacement: => DataFrame): Unit = {
     recoverSwap(path)
     val tmp = s"$path.rewrite"
     deletePath(tmp)
-    replacement.write.mode(SaveMode.Overwrite).format(format).save(tmp)
+    replacement.write.mode(SaveMode.Overwrite).json(tmp)
     val old = s"$path.old"
     deletePath(old)
     renamePath(path, old)
@@ -283,7 +284,7 @@ final class StateStore(
       .agg(max_by(struct(col("height"), col("block_id"), col("block_num")), col("height")).as("w"))
       .select(col("key"), col("w.height").as("height"),
         col("w.block_id").as("block_id"), col("w.block_num").as("block_num"))
-      .coalesce(1), format = "json")
+      .coalesce(1))
 
   // The mutation tables. statsCols: the manifest records per-file
   // (tablet/singlet id, height, key) bounds at commit, and the point/as-of
@@ -414,7 +415,7 @@ final class StateStore(
       // Materializes the union to a tmp table BEFORE the swap, so the
       // explicit source file paths above are still live while read.
       rewriteTable(
-        checkpointsPath, existing.unionByName(legacy).coalesce(1), format = "json")
+        checkpointsPath, existing.unionByName(legacy).coalesce(1))
     }
   }
 
@@ -497,6 +498,73 @@ final class StateStore(
     java.security.MessageDigest.getInstance("MD5")
       .digest(tabletId.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
+  /** A snapshot's directory name — the snapshot table's catalog entry:
+    * the directory names alone say which snapshots a tablet has. */
+  private def snapshotDirName(collection: Int, tabletId: String, atHeight: Long): String =
+    SnapshotDirFormat.format(collection, tabletHashOf(tabletId), atHeight)
+
+  /** `(at_height, collection, directory)` of every snapshot directory
+    * whose name carries `tabletId`'s hash: one listing of the snapshot
+    * table, no file opened. */
+  private def snapshotDirsOf(tabletId: String): Seq[(Long, Int, Path)] = {
+    val (fs, p) = fsPath(snapshotsPath)
+    val hash = tabletHashOf(tabletId)
+    val listed =
+      try fs.listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    listed.filter(_.isDirectory).flatMap { st =>
+      st.getPath.getName match {
+        case SnapshotDirPattern(c, `hash`, h) =>
+          scala.util.Try((h.toLong, c.toInt, st.getPath)).toOption
+        case _ => None
+      }
+    }
+  }
+
+  /** What a snapshot directory's parquet footers say: its row count,
+    * whether every non-empty row group's `tablet_id` bounds are exactly
+    * `tabletId` (a hash collision is skipped), `min(height)` (0 — no
+    * floor — when a row group carries no height statistics), and the
+    * stored `squelch_count` (None when a row group carries no statistics
+    * for it). Driver-side, no Spark job. */
+  private def snapshotDirFacts(tabletId: String, dir: Path): SnapshotDirFacts = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    def utf8(v: Any) = v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
+    val groups = Footers.read(conf, Footers.parquetLeaves(conf, dir.toString)) { footer =>
+      footer.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { b =>
+        def stats(c: String) = b.getColumns.asScala.find(_.getPath.toDotString == c)
+          .map(_.getStatistics).filter(_.hasNonNullValue)
+        (b.getRowCount,
+          stats("tablet_id").exists(st =>
+            utf8(st.genericGetMin) == tabletId && utf8(st.genericGetMax) == tabletId),
+          stats("height").map(_.genericGetMin.asInstanceOf[Long]),
+          stats("squelch_count").map(_.genericGetMax.asInstanceOf[Long]))
+      }
+    }.flatten
+    val heights = groups.map(_._3)
+    val squelches = groups.map(_._4)
+    SnapshotDirFacts(groups.map(_._1).sum, groups.forall(_._2),
+      if (heights.contains(None)) 0L else heights.flatten.minOption.getOrElse(0L),
+      if (squelches.contains(None)) None else squelches.flatten.maxOption)
+  }
+
+  /** `tabletId`'s snapshots newest first, as `(at_height, directories
+    * with their collection and footer facts)`. A directory holding no
+    * rows, or rows of another tablet, is no snapshot and is left out; a
+    * height left with no directory is not listed. Only `heights` are
+    * considered, and their footers are read one height at a time, only
+    * as far as the caller pulls. */
+  private def snapshotsOf(tabletId: String, heights: Long => Boolean = _ => true)
+      : Iterator[(Long, Seq[(Int, Path, SnapshotDirFacts)])] =
+    snapshotDirsOf(tabletId).groupBy(_._1).toSeq.sortBy(-_._1).iterator
+      .filter(g => heights(g._1))
+      .map { case (h, dirs) =>
+        h -> dirs.map { case (_, c, p) => (c, p, snapshotDirFacts(tabletId, p)) }
+          .filter { case (_, _, f) => f.rows > 0 && f.ofTablet }
+      }
+      .filter(_._2.nonEmpty)
+
   /** Append one tablet snapshot (the reference's TabletIndex write,
     * indexing.go:100–147): `index` carries (primary_key, height) as built by
     * [[graft.snapshot.Snapshots.buildTabletIndex]]. Deterministic commit
@@ -508,7 +576,7 @@ final class StateStore(
       atHeight: Long,
       squelchCount: Long,
       collection: Int = 0): String = {
-    val dir = f"s-$collection-${tabletHashOf(tabletId)}-$atHeight%017d"
+    val dir = snapshotDirName(collection, tabletId, atHeight)
     atomicAppend(
       index.select(
         lit(collection).as("collection"),
@@ -532,22 +600,23 @@ final class StateStore(
       ignoreRange: Option[(Long, Long)] = None): Option[(Long, DataFrame)] =
     tabletSnapshotLookup(tabletId, maxHeight, ignoreRange).map(l => l.atHeight -> l.rows)
 
-  /** THE snapshot-metadata statement: [[latestTabletSnapshot]]'s choice
-    * plus everything a snapshot-routed read needs to bound its scans —
-    * the snapshot's `min(height)` (the hydration bound, see
-    * [[graft.snapshot.Snapshots.hydrationBoundOf]]), its stored
-    * `squelch_count`, and, for a point read, `primaryKey`'s own height in
-    * it — all from ONE `groupBy(at_height)` over the tablet's snapshot
-    * rows. The newest usable `at_height` is picked on the driver from
-    * the per-snapshot groups (a handful per tablet after retention
-    * pruning), which is also where `ignoreRange`'s re-fetch below the
-    * window happens: the groups at or below its start are already in
-    * hand. None when no snapshot qualifies. */
+  /** The snapshot choice: [[latestTabletSnapshot]]'s answer plus
+    * everything a snapshot-routed read needs to bound its scans — the
+    * snapshot's `min(height)` (the hydration bound, see
+    * [[graft.snapshot.Snapshots.hydrationBoundOf]]) and its stored
+    * `squelch_count` — made on the driver with no Spark job. One listing
+    * of the snapshot table gives the candidates (each directory name
+    * carries collection, tablet hash and `at_height`); the newest usable
+    * height's directory footers give the row count and the metadata.
+    * A directory with no rows is no snapshot and the next older height
+    * is tried; directories of several collections at one height are one
+    * snapshot. `ignoreRange`'s re-fetch below the window is the same
+    * walk down the heights. The rows frame reads the chosen directories
+    * only. None when no snapshot qualifies. */
   private[graft] def tabletSnapshotLookup(
       tabletId: String,
       maxHeight: Long,
-      ignoreRange: Option[(Long, Long)] = None,
-      primaryKey: Option[String] = None): Option[StateStore.SnapshotLookup] = {
+      ignoreRange: Option[(Long, Long)] = None): Option[StateStore.SnapshotLookup] = {
     val effectiveMax = ignoreRange match {
       case Some((start, stop)) if start < stop && maxHeight > start && maxHeight <= stop =>
         start
@@ -556,27 +625,20 @@ final class StateStore(
     val inIgnore = (h: Long) => ignoreRange.exists {
       case (start, stop) => start < stop && h > start && h <= stop
     }
-    val scoped = tabletSnapshots
-      .filter(col("tablet_id") === lit(tabletId) && col("at_height") <= lit(effectiveMax))
-    val keyHeight = primaryKey.fold(lit(null).cast("long"))(k =>
-      when(col("primary_key") === lit(k), col("height")))
-    // One row per snapshot: (at_height, min height, squelch, key height).
-    val groups = scoped.groupBy(col("at_height"))
-      .agg(min(col("height")), max(col("squelch_count")), min(keyHeight))
-      .collect().toSeq
-    def newest(c: Seq[org.apache.spark.sql.Row]) =
-      if (c.isEmpty) None else Some(c.maxBy(_.getLong(0)))
-    newest(groups).flatMap { r =>
-      // The best snapshot lands inside the ignored window — re-fetch
-      // strictly below it (indexing.go:320–325's recursive re-fetch).
-      if (inIgnore(r.getLong(0))) newest(groups.filter(_.getLong(0) <= ignoreRange.get._1))
-      else Some(r)
-    }.map { r =>
-      val h = r.getLong(0)
-      def orMax(i: Int) = if (r.isNullAt(i)) Long.MaxValue else r.getLong(i)
-      StateStore.SnapshotLookup(h,
-        scoped.filter(col("at_height") === lit(h)).select("primary_key", "height"),
-        orMax(1), r.getLong(2), orMax(3))
+    // The best snapshot inside the ignored window re-fetches strictly
+    // below it (indexing.go:320–325's recursive re-fetch): skipping the
+    // window's heights on the way down is the same choice.
+    snapshotsOf(tabletId, h => h <= effectiveMax && !inIgnore(h)).nextOption().map {
+      case (h, dirs) =>
+        val squelch = dirs.map { case (_, p, f) =>
+          f.squelch.getOrElse(throw new IllegalStateException(
+            s"snapshot $p carries no squelch_count statistics"))
+        }
+        StateStore.SnapshotLookup(h,
+          spark.read.schema(Schemas.tabletSnapshots).parquet(dirs.map(_._2.toString): _*)
+            .filter(col("tablet_id") === lit(tabletId) && col("at_height") === lit(h))
+            .select("primary_key", "height"),
+          dirs.map(_._3.minHeight).min, squelch.max, dirs.map(_._1))
     }
   }
 
@@ -602,8 +664,8 @@ final class StateStore(
     readMix.recordTailScan(tabletId)
     tabletSnapshotLookup(tabletId, atHeight, ignoreRange) match {
       case Some(StateStore.SnapshotLookup(snapH, snap, bound, _, _)) =>
-        // The snapshot's min height comes with the lookup (same
-        // statement) and bounds the hydration scan — the difference
+        // The snapshot's min height comes with the lookup (from its
+        // footers) and bounds the hydration scan — the difference
         // between O(history) and O(live band) reads on a deep tablet;
         // see readTabletAtWithSnapshot.
         val hb = Some(bound)
@@ -658,9 +720,25 @@ final class StateStore(
       min(col("at_height").cast("long")),
       sum(when((col("tablet_id") <=> lit(tabletId)) &&
         col("at_height").isNotNull, 0L).otherwise(1L))).head()
-    val maxAt = Option(aggRow.get(0)).map(_.asInstanceOf[Long])
-    val minAt = Option(aggRow.get(1)).map(_.asInstanceOf[Long])
-    val nFallbackish = Option(aggRow.get(2)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    asOfJoinBounded(tabletId, probes,
+      Option(aggRow.get(0)).map(_.asInstanceOf[Long]),
+      Option(aggRow.get(1)).map(_.asInstanceOf[Long]),
+      Option(aggRow.get(2)).forall(_.asInstanceOf[Long] == 0L),
+      ignoreRange)
+  }
+
+  /** [[asOfJoin]] with the probe bounds already known: `maxAt` / `minAt`
+    * are the probes' max and min `at_height` (None when there are no
+    * probes), and `allOnTablet` says every probe is on `tabletId` with a
+    * non-null height. A caller that built its probes knows these without
+    * the aggregate. */
+  private def asOfJoinBounded(
+      tabletId: String,
+      probes: DataFrame,
+      maxAt: Option[Long],
+      minAt: Option[Long],
+      allOnTablet: Boolean,
+      ignoreRange: Option[(Long, Long)]): DataFrame =
     maxAt.flatMap(tabletSnapshotLookup(tabletId, _, ignoreRange)) match {
       case Some(StateStore.SnapshotLookup(snapH, snap, bound, _, _)) =>
         val hb = Some(bound)
@@ -678,7 +756,7 @@ final class StateStore(
         // non-null, at or above the snapshot), an empty relation replaces
         // it and the plan never lists a pre-snapshot file at all.
         val fallbackSrc =
-          if (nFallbackish == 0L && minAt.exists(_ >= snapH))
+          if (allOnTablet && minAt.exists(_ >= snapH))
             spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               Schemas.tabletRows)
@@ -691,7 +769,6 @@ final class StateStore(
             tabletRowsPruned(Seq(ManifestTable.StatsLte("height", m)))),
           probes)
     }
-  }
 
   /** State diff between two heights — the changefeed surface
     * ([[graft.read.TemporalReads.readTabletDiff]] semantics, INCREMENTAL
@@ -723,9 +800,8 @@ final class StateStore(
       .filter(col("tablet_id") === lit(tabletId) &&
         col("height") > lit(fromHeight) && col("height") <= lit(toHeight))
     // Persisted: the post-winner frame is consumed TWICE — the as-of
-    // join's driver-side probe aggregate (runs eagerly below) and the
-    // final classification join — and without the persist each consumer
-    // re-runs the window scan + argmax shuffle. Window-bounded by
+    // join's probes and the final classification join — and without the
+    // persist each consumer re-runs the window scan + argmax shuffle. Window-bounded by
     // construction (a changefeed poll's sliver), so the cached footprint
     // is small. The cache's lifetime is tied to THIS call: the result is
     // materialized before returning and the persist released (below) —
@@ -742,7 +818,10 @@ final class StateStore(
       lit(fromHeight).as("at_height"))
     // asOfJoin signals "absent or tombstoned at fromHeight" as a null
     // height — exactly the pre-side liveness bit classification needs.
-    val pre = asOfJoin(tabletId, probes)
+    // Every probe is on this tablet at fromHeight, so the bounds are
+    // known without asOfJoin's probe aggregate.
+    val pre = asOfJoinBounded(tabletId, probes, Some(fromHeight), Some(fromHeight),
+      allOnTablet = true, ignoreRange = None)
       .select(col("primary_key"),
         col("height").as("pre_height"), col("value").as("pre_value"))
     val oldLive = col("pre_height").isNotNull
@@ -1045,7 +1124,13 @@ final class StateStore(
     * height); the columnar re-expression rebuilds ALL in-scope
     * `(tablet, at_height)` entries in ONE distributed job — the entry list
     * joins the mutation table, a per-entry argmax recomputes each index,
-    * and the snapshot table is swap-rewritten crash-safely in place.
+    * and the write lands every entry in its own `s-<coll>-<hash>-<h>`
+    * directory under a staging root. Each entry's directory is then
+    * replaced on its own (delete, then rename), the same per-directory
+    * repair [[reindexTablet]] makes; out-of-scope snapshots are not
+    * touched. A crash between an entry's delete and its rename leaves
+    * that entry absent — reads take an older snapshot or the full route
+    * meanwhile — and a rerun rebuilds it.
     *
     * `maxHeight` bounds entries (reference `height`, 0 → all); `lowerBound`
     * restarts from a tablet id (reference `lowerBound`); `dryRun` only
@@ -1054,111 +1139,106 @@ final class StateStore(
       maxHeight: Long = Long.MaxValue,
       lowerBound: String = "",
       dryRun: Boolean = false,
-      heavyIndexRows: Long = HeavyIndexRowWarning): (Long, Long) =
-    reindexScoped(
-      col("at_height") <= lit(maxHeight) && col("tablet_id") >= lit(lowerBound),
-      dryRun, heavyIndexRows)
+      heavyIndexRows: Long = HeavyIndexRowWarning): (Long, Long) = {
+    import spark.implicits._
+    val inScope = tabletSnapshots
+      .filter(col("at_height") <= lit(maxHeight) && col("tablet_id") >= lit(lowerBound))
+      .select("collection", "tablet_id", "at_height").distinct()
+      .as[(Int, String, Long)].collect().toSeq
+    val (tabletCount, indexCount) =
+      (inScope.map(_._2).distinct.size.toLong, inScope.size.toLong)
+    if (dryRun || indexCount == 0L) return (tabletCount, indexCount)
+    val entries = inScope.toDF("collection", "tablet_id", "at_height")
+
+    // Same aggregation semantics as Snapshots.buildTabletIndex (durable
+    // rows only; per-pk argmax of height; tombstones filtered AFTER the
+    // argmax), generalized to every entry at once. A mutation row
+    // participates in each of its tablet's indexes at or above its height
+    // — exactly the reference's per-entry rebuild, as one shuffle.
+    val rowsSlim = tabletRows
+      .select(col("tablet_id"), col("height"), col("primary_key"), col("is_deletion"))
+    val perPk = rowsSlim.join(entries, Seq("tablet_id"))
+      .filter(col("height") <= col("at_height"))
+      .groupBy("collection", "tablet_id", "at_height", "primary_key")
+      .agg(
+        max_by(struct(col("height"), col("is_deletion")), col("height")).as("w"),
+        count(lit(1)).as("n_versions"))
+      .persist()
+    try {
+      val perEntry = perPk.groupBy("collection", "tablet_id", "at_height")
+        .agg(sum(col("n_versions")).as("squelch_count"),
+          sum(when(col("w.is_deletion"), 0L).otherwise(1L)).as("n_index_rows"))
+        .persist()
+      try {
+        // The reference flags serialized index values above 25 MB
+        // (indexing.go:145–148); the columnar analogue is a row-count
+        // threshold (1M (pk, height) pairs ≈ tens of MB).
+        perEntry.filter(col("n_index_rows") >= lit(heavyIndexRows))
+          .collect().foreach { r =>
+            Console.err.println(
+              s"[reindex] index pretty heavy: tablet=${r.getString(1)} " +
+                s"at_height=${r.getLong(2)} rows=${r.getLong(4)}")
+          }
+        val staging = s"$stagingRoot/${java.util.UUID.randomUUID().toString}"
+        perPk.filter(!col("w.is_deletion"))
+          .join(perEntry.select("collection", "tablet_id", "at_height", "squelch_count"),
+            Seq("collection", "tablet_id", "at_height"))
+          .select(col("collection"), col("tablet_id"), col("at_height"),
+            col("squelch_count"), col("primary_key"), col("w.height").as("height"),
+            format_string(SnapshotDirFormat,
+              col("collection"), md5(col("tablet_id")), col("at_height")).as("dir"))
+          .write.partitionBy("dir").parquet(staging)
+        // An entry whose rebuilt index is empty (every key tombstoned)
+        // has no staged directory: its old one is only deleted.
+        inScope.foreach { case (c, t, h) =>
+          val dir = snapshotDirName(c, t, h)
+          deletePath(s"$snapshotsPath/$dir")
+          if (pathExists(s"$staging/dir=$dir"))
+            renamePath(s"$staging/dir=$dir", s"$snapshotsPath/$dir")
+        }
+        deletePath(staging)
+      } finally perEntry.unpersist()
+    } finally perPk.unpersist()
+    (tabletCount, indexCount)
+  }
 
   /** ReindexTablet (indexing.go:173–223): recompute the LATEST index entry
     * of one tablet at or below `maxHeight`, in place. Returns the reindexed
     * height, or None when no index exists there ("re-index not required").
     * `write = false` mirrors the reference's read-only mode.
     *
-    * When the entry still lives in its own committed directory (the
-    * append-only layout), the repair is a per-DIRECTORY swap — delete the
-    * corrupt entry's directory, rebuild, re-append — never a whole-table
-    * rewrite (reindex is rerunnable, so a crash mid-repair just repairs
-    * again). The table swap remains as the fallback for a flattened
-    * table, where leftover rows would otherwise merge with the rebuilt
-    * entry. */
+    * The repair is per DIRECTORY — delete the entry's directory, rebuild,
+    * re-append — never a whole-table rewrite (reindex is rerunnable, so a
+    * crash mid-repair just repairs again). */
   def reindexTablet(
       tabletId: String,
       maxHeight: Long = Long.MaxValue,
       write: Boolean = true): Option[Long] =
-    latestTabletSnapshot(tabletId, maxHeight).map { case (h, _) =>
+    tabletSnapshotLookup(tabletId, maxHeight).map { l =>
+      val h = l.atHeight
       if (write) {
-        val entry = tabletSnapshots
-          .filter(col("tablet_id") === lit(tabletId) && col("at_height") === lit(h))
-          .select("collection").limit(1).collect().head
-        val collection = entry.getInt(0)
-        val dir = f"s-$collection-${tabletHashOf(tabletId)}-$h%017d"
-        if (pathExists(s"$snapshotsPath/$dir")) {
-          val scoped = tabletRowsPruned(Seq(
-              ManifestTable.StatsEq("tablet_id", tabletId),
-              ManifestTable.StatsLte("height", h)))
-            .filter(
-              col("tablet_id") === lit(tabletId) && col("height") <= lit(h)).persist()
+        val scoped = tabletRowsPruned(Seq(
+            ManifestTable.StatsEq("tablet_id", tabletId),
+            ManifestTable.StatsLte("height", h)))
+          .filter(
+            col("tablet_id") === lit(tabletId) && col("height") <= lit(h)).persist()
+        try {
+          val squelch = scoped.count()
+          val idx = graft.snapshot.Snapshots
+            .buildTabletIndex(scoped, tabletId, h).persist()
           try {
-            val squelch = scoped.count()
-            val idx = graft.snapshot.Snapshots
-              .buildTabletIndex(scoped, tabletId, h).persist()
-            try {
-              if (idx.count() >= HeavyIndexRowWarning)
-                Console.err.println(
-                  s"[reindex] index pretty heavy: tablet=$tabletId at_height=$h")
-              deletePath(s"$snapshotsPath/$dir")
-              writeTabletSnapshot(idx, tabletId, h, squelch, collection)
-            } finally idx.unpersist()
-          } finally scoped.unpersist()
-        } else
-          reindexScoped(
-            col("tablet_id") === lit(tabletId) && col("at_height") === lit(h),
-            dryRun = false, HeavyIndexRowWarning)
+            if (idx.count() >= HeavyIndexRowWarning)
+              Console.err.println(
+                s"[reindex] index pretty heavy: tablet=$tabletId at_height=$h")
+            l.collections.foreach { c =>
+              deletePath(s"$snapshotsPath/${snapshotDirName(c, tabletId, h)}")
+              writeTabletSnapshot(idx, tabletId, h, squelch, c)
+            }
+          } finally idx.unpersist()
+        } finally scoped.unpersist()
       }
       h
     }
-
-  private def reindexScoped(
-      inScope: Column, dryRun: Boolean, heavyIndexRows: Long): (Long, Long) = {
-    val snaps = tabletSnapshots
-    val entries = snaps.filter(inScope)
-      .select("collection", "tablet_id", "at_height").distinct().persist()
-    try {
-      val stats = entries.agg(countDistinct(col("tablet_id")), count(lit(1)))
-        .collect().head
-      val (tabletCount, indexCount) = (stats.getLong(0), stats.getLong(1))
-      if (dryRun || indexCount == 0L) return (tabletCount, indexCount)
-
-      // Same aggregation semantics as Snapshots.buildTabletIndex (durable
-      // rows only; per-pk argmax of height; tombstones filtered AFTER the
-      // argmax), generalized to every entry at once. A mutation row
-      // participates in each of its tablet's indexes at or above its height
-      // — exactly the reference's per-entry rebuild, as one shuffle.
-      val rowsSlim = tabletRows
-        .select(col("tablet_id"), col("height"), col("primary_key"), col("is_deletion"))
-      val perPk = rowsSlim.join(entries, Seq("tablet_id"))
-        .filter(col("height") <= col("at_height"))
-        .groupBy("collection", "tablet_id", "at_height", "primary_key")
-        .agg(
-          max_by(struct(col("height"), col("is_deletion")), col("height")).as("w"),
-          count(lit(1)).as("n_versions"))
-        .persist()
-      try {
-        val perEntry = perPk.groupBy("collection", "tablet_id", "at_height")
-          .agg(sum(col("n_versions")).as("squelch_count"),
-            sum(when(col("w.is_deletion"), 0L).otherwise(1L)).as("n_index_rows"))
-          .persist()
-        try {
-          // The reference flags serialized index values above 25 MB
-          // (indexing.go:145–148); the columnar analogue is a row-count
-          // threshold (1M (pk, height) pairs ≈ tens of MB).
-          perEntry.filter(col("n_index_rows") >= lit(heavyIndexRows))
-            .collect().foreach { r =>
-              Console.err.println(
-                s"[reindex] index pretty heavy: tablet=${r.getString(1)} " +
-                  s"at_height=${r.getLong(2)} rows=${r.getLong(4)}")
-            }
-          val rebuilt = perPk.filter(!col("w.is_deletion"))
-            .join(perEntry.select("collection", "tablet_id", "at_height", "squelch_count"),
-              Seq("collection", "tablet_id", "at_height"))
-            .select(col("collection"), col("tablet_id"), col("at_height"),
-              col("squelch_count"), col("primary_key"), col("w.height").as("height"))
-          rewriteTable(snapshotsPath, snaps.filter(!inScope).unionByName(rebuilt))
-        } finally perEntry.unpersist()
-      } finally perPk.unpersist()
-      (tabletCount, indexCount)
-    } finally entries.unpersist()
-  }
 
   /** Apply the retention policy to one tablet's snapshot log
     * (PruneTabletIndexes, indexing.go:328–396 via
@@ -1167,40 +1247,20 @@ final class StateStore(
     * height down; tablets with ≤ pruneFrequency + 2 snapshots are left
     * untouched.
     *
-    * Physical deletion exploits the append-only layout: every snapshot is
-    * committed as its OWN deterministic directory (`s-<coll>-<hash>-<h>`),
-    * so pruning one is one directory delete — O(dropped snapshots), the
-    * columnar equivalent of the reference's per-key KV delete, never a
-    * table rewrite. Fallback: if any dropped height no longer has its own
-    * directory (a reindex rewrote the table flat), prune that tablet via
-    * the crash-safe swap as before. Returns the kept heights. */
+    * The heights come from the snapshot catalog (directory names, with
+    * the lookup's rule that a directory holding no rows is no snapshot),
+    * and every snapshot is its OWN deterministic directory
+    * (`s-<coll>-<hash>-<h>`), so pruning one is one directory delete —
+    * O(dropped snapshots), the columnar equivalent of the reference's
+    * per-key KV delete, never a table rewrite. Returns the kept heights. */
   def pruneTabletSnapshots(tabletId: String, pruneFrequency: Int): Seq[Long] = {
-    val heights = tabletSnapshots
-      .filter(col("tablet_id") === lit(tabletId))
-      .select("at_height").distinct().collect().map(_.getLong(0)).toSeq
+    val snapshots = snapshotsOf(tabletId).toSeq
+    val heights = snapshots.map(_._1).reverse
     val keep = graft.snapshot.Snapshots.pruneRetention(heights, pruneFrequency)
-    if (keep.toSet != heights.toSet) {
-      val drop = heights.toSet -- keep.toSet
-      val tabletHash = tabletHashOf(tabletId)
-      val (fs, p) = fsPath(snapshotsPath)
-      val dirByHeight: Map[Long, Path] = fs.listStatus(p)
-        .filter(_.isDirectory).map(_.getPath)
-        .flatMap { d =>
-          d.getName.split("-") match {
-            case Array("s", _, hash, h) if hash == tabletHash =>
-              Some(h.toLong -> d)
-            case _ => None
-          }
-        }.toMap
-      if (drop.forall(dirByHeight.contains))
-        drop.foreach(h => fs.delete(dirByHeight(h), true))
-      else {
-        val keepSet = keep.toSet
-        rewriteTable(snapshotsPath, tabletSnapshots.filter(
-          col("tablet_id") =!= lit(tabletId) ||
-            col("at_height").isInCollection(keepSet)))
-      }
-    }
+    val keepSet = keep.toSet
+    val (fs, _) = fsPath(snapshotsPath)
+    for ((h, dirs) <- snapshots if !keepSet.contains(h); (_, dir, _) <- dirs)
+      fs.delete(dir, true)
     keep
   }
 
@@ -1220,28 +1280,28 @@ final class StateStore(
       atHeight: Long,
       speculative: Seq[DataFrame] = Nil): DataFrame = {
     readMix.recordPointRead(tabletId)
-    tabletSnapshotLookup(tabletId, atHeight, primaryKey = Some(primaryKey)) match {
-      case Some(StateStore.SnapshotLookup(snapH, snap, _, _, keyBound)) =>
+    tabletSnapshotLookup(tabletId, atHeight) match {
+      case Some(StateStore.SnapshotLookup(snapH, snap, bound, _, _)) =>
         // Snapshot route for the POINT read (read.go:240–260 consults the
-        // index the same way): the key's snapshot entry pins its single
-        // hydration height, so the scan is one row + the key's tail
-        // (snapH, atHeight] — and that floor prunes manifest FILES, not
-        // just row groups. An absent key (never written, or tombstoned at
-        // snapH) hydrates nothing and resolves from the tail alone,
-        // exactly like the full route.
+        // index the same way): the key's snapshot entry hydrates it, so
+        // the scan is one row + the key's tail (snapH, atHeight] — and the
+        // floor prunes manifest FILES, not just row groups. The floor is
+        // the snapshot's hydration bound: at or below the key's own
+        // snapshot height, so the semi-join on the key's snapshot row
+        // keeps the result exact. An absent key (never written, or
+        // tombstoned at snapH) hydrates nothing and resolves from the
+        // tail alone, exactly like the full route.
         val keySnap = snap.filter(col("primary_key") === lit(primaryKey))
-        val keyH = Some(keyBound)
         val src = tabletRowsPruned(Seq(
           ManifestTable.StatsEq("tablet_id", tabletId),
           ManifestTable.StatsEq("primary_key", primaryKey),
-          ManifestTable.StatsGte("height",
-            math.min(keyH.getOrElse(Long.MaxValue), snapH + 1)),
+          ManifestTable.StatsGte("height", math.min(bound, snapH + 1)),
           ManifestTable.StatsLte("height", atHeight)))
         graft.snapshot.Snapshots.readTabletAtWithSnapshot(
           src.filter(col("primary_key") === lit(primaryKey)),
           keySnap, snapH, tabletId, atHeight,
           speculative.map(_.filter(col("primary_key") === lit(primaryKey))),
-          keyH)
+          Some(bound))
       case None =>
         graft.read.TemporalReads.readTabletRowAt(
           tabletRowsPruned(Seq(
@@ -1342,8 +1402,7 @@ final class StateStore(
   def deleteAllShardCheckpoints(): Unit = {
     rewriteTable(
       checkpointsPath,
-      checkpointsDF.filter(!col("key").startsWith(ShardCheckpointPrefix)).coalesce(1),
-      format = "json")
+      checkpointsDF.filter(!col("key").startsWith(ShardCheckpointPrefix)).coalesce(1))
     cpCache.keys.filter(_.startsWith(ShardCheckpointPrefix)).foreach(cpCache.remove)
   }
 }
@@ -1358,11 +1417,21 @@ object StateStore {
 
   /** One [[StateStore.tabletSnapshotLookup]] answer: the chosen
     * snapshot's height and `(primary_key, height)` rows, its
-    * `min(height)` (hydration bound; Long.MaxValue when empty), its
-    * stored squelch count, and the looked-up key's height in it
-    * (Long.MaxValue when the key is absent or none was asked for). */
+    * `min(height)` (hydration bound; 0, no floor, when its footers carry
+    * no height statistics), its stored squelch count, and the collections
+    * of its directories. */
   final case class SnapshotLookup(atHeight: Long, rows: DataFrame,
-      hydrationBound: Long, squelchCount: Long, keyBound: Long)
+      hydrationBound: Long, squelchCount: Long, collections: Seq[Int])
+
+  /** A snapshot directory's name: `s-<collection>-<md5 of tablet_id>-<at_height>`,
+    * written by both the driver (`String.format`) and the reindex job
+    * (`format_string`), and parsed back by the pattern. */
+  private val SnapshotDirFormat = "s-%d-%s-%017d"
+  private val SnapshotDirPattern = """s-(-?\d+)-([0-9a-f]{32})-(\d+)""".r
+
+  /** [[StateStore.snapshotDirFacts]]' answer for one directory. */
+  private final case class SnapshotDirFacts(
+      rows: Long, ofTablet: Boolean, minHeight: Long, squelch: Option[Long])
 
   /** Age guard for the mutation-table compaction's INLINE orphan sweep.
     *

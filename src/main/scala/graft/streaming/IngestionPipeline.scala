@@ -314,7 +314,7 @@ final class IngestionPipeline(
     // job, and the index DataFrame has the write as its only consumer.
     def written(dir: String): Long =
       Footers.rowCount(spark.sessionState.newHadoopConf(), dir)
-    withJobLabel(spark, "index.lookup")(store.latestTabletSnapshotMeta(tablet, hi)) match {
+    store.latestTabletSnapshotMeta(tablet, hi) match {
       case Some((prevH, prevSquelch, prevIdx)) if prevH < hi =>
         // Steady state — INCREMENTAL (indexing.go:265–271): seed from the
         // previous snapshot and scan only the tail (prevH, hi]. Cost is

@@ -96,12 +96,13 @@ class CommitJobsSpec extends SparkTestBase {
     assert(store.tabletRows.count() === 3L && store.singletEntries.count() === 3L)
   }
 
+  private val mschema = StructType(schema.fields :+
+    StructField("deleted", org.apache.spark.sql.types.BooleanType, nullable = false))
+
   test("a merge launches its touched-key collect and its derivation only, " +
     "labelled merge.touchedKeys and merge.derive") {
     implicit val s = spark
     import s.implicits._
-    val mschema = StructType(schema.fields :+
-      StructField("deleted", org.apache.spark.sql.types.BooleanType, nullable = false))
     val t = new ManifestTable(tmpDir("jobs-merge"), mschema,
       statsCols = Seq("tablet_id", "primary_key"))
     def upd(rows: (String, Long, String, Boolean)*) =
@@ -117,5 +118,27 @@ class CommitJobsSpec extends SparkTestBase {
     // The touched-key collect (1) and the derivation (6): no read-back of
     // the merged files.
     assert(jobs.size === 7, jobs)
+  }
+
+  test("a merge whose updates come from another session runs its " +
+    "touched-key collect as one job") {
+    implicit val s = spark
+    // A streaming batch's frames live in a clone of the table's session:
+    // the collect's AQE-off scope must be on that session to take effect.
+    val batchSession = spark.newSession()
+    import batchSession.implicits._
+    val t = new ManifestTable(tmpDir("jobs-merge-session"), mschema,
+      statsCols = Seq("tablet_id", "primary_key"))
+    def upd(rows: (String, Long, String, Boolean)*) =
+      rows.toDF("tablet_id", "height", "primary_key", "deleted")
+    t.merge(upd(("t1", 1L, "a", false), ("t1", 1L, "b", false)),
+      Seq("tablet_id", "primary_key"), "height", "deleted", "m0")
+    val aqe = batchSession.conf.get("spark.sql.adaptive.enabled")
+    val (report, jobs) = jobsOf(t.merge(
+      upd(("t1", 2L, "a", false), ("t1", 2L, "c", false)),
+      Seq("tablet_id", "primary_key"), "height", "deleted", "m1"))
+    assert(report.rewritten === 1)
+    assert(jobs.count(_ == "merge.touchedKeys") === 1, jobs)
+    assert(batchSession.conf.get("spark.sql.adaptive.enabled") === aqe)
   }
 }

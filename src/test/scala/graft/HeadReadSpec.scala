@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   *     planned from the manifest without listing or stat-ing data files;
   *   - the reversible overlay is ONE pre-ranked frame, equal in effect to
   *     the per-block frames it replaces;
-  *   - the snapshot a read routes through, and its hydration bounds, come
-  *     from ONE statement;
+  *   - the snapshot a read routes through, and its hydration bound, come
+  *     from the snapshot table's directory names and footers, with no
+  *     statement;
   *
   * plus the two store/pipeline faults found on the way (a restarted
   * pipeline's unseeded fork tree, a checksum-torn generation pointer).
@@ -231,9 +232,9 @@ class HeadReadSpec extends SparkTestBase {
     } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
   }
 
-  test("the merged snapshot lookup equals the two-aggregate lookup (ignore " +
-    "range, key absent from the snapshot, no snapshot) and runs in ONE " +
-    "statement") {
+  test("the catalog snapshot lookup equals the two-aggregate lookup (ignore " +
+    "range, no snapshot, empty directory, hash collision, two collections, " +
+    "reindexed snapshot) and runs no statement") {
     implicit val s = spark
     import s.implicits._
     val store = new StateStore(tmpDir("lookup"), StateStore.ManifestCommit)
@@ -248,12 +249,24 @@ class HeadReadSpec extends SparkTestBase {
     assert(store.tabletSnapshotLookup("t1", 12L).isEmpty)
     val generic = (h: Long) => tabletRows(TemporalReads.readTabletAt(rows, "t1", h))
     assert(tabletRows(store.readTabletAt("t1", 12L)) === generic(12L))
-    Seq(4L, 8L, 10L).foreach { h =>
-      store.writeTabletSnapshot(Snapshots.buildTabletIndex(rows, "t1", h), "t1", h,
-        Snapshots.squelchCount(rows, "t1", h), 1)
-    }
+    def snapshot(h: Long, coll: Int = 1, keys: String => Boolean = _ => true): String =
+      store.writeTabletSnapshot(
+        Snapshots.buildTabletIndex(rows, "t1", h).filter(col("primary_key").isin(
+          Seq("k0", "k1", "k2", "k3", "late").filter(keys): _*)),
+        "t1", h, Snapshots.squelchCount(rows, "t1", h), coll)
+    Seq(4L, 8L, 10L).foreach(snapshot(_))
+    // An empty directory (an index whose keys are all tombstoned) at 11
+    // is no snapshot. A directory named for t1 but holding another
+    // tablet's rows (a hash collision) at 12 is skipped too.
+    snapshot(11L, keys = _ => false)
+    val fs = new org.apache.hadoop.fs.Path(store.snapshotsPath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val other = new org.apache.hadoop.fs.Path(store.writeTabletSnapshot(
+      Seq(("k0", 3L)).toDF("primary_key", "height"), "t2", 12L, 1L, 3))
+    assert(fs.rename(other, new org.apache.hadoop.fs.Path(other.getParent,
+      other.getName.replace(md5Hex("t2"), md5Hex("t1")))))
     // The two-aggregate answer, spelled out.
-    def reference(maxH: Long, ignore: Option[(Long, Long)]): Option[(Long, Long)] = {
+    def reference(maxH: Long, ignore: Option[(Long, Long)]): Option[(Long, Long, Long)] = {
       val inIgnore = (h: Long) => ignore.exists { case (a, b) => a < b && h > a && h <= b }
       val effMax = ignore match {
         case Some((a, b)) if a < b && maxH > a && maxH <= b => a
@@ -262,22 +275,26 @@ class HeadReadSpec extends SparkTestBase {
       def maxAt(m: Long) = Option(store.tabletSnapshots.filter(col("tablet_id") === "t1" &&
         col("at_height") <= m).agg(max("at_height")).head().get(0)).map(_.asInstanceOf[Long])
       maxAt(effMax).flatMap(h => if (inIgnore(h)) maxAt(ignore.get._1) else Some(h))
-        .map(h => h -> Snapshots.hydrationBoundOf(store.tabletSnapshots
-          .filter(col("tablet_id") === "t1" && col("at_height") === h)).get)
+        .map { h =>
+          val snap = store.tabletSnapshots
+            .filter(col("tablet_id") === "t1" && col("at_height") === h)
+          (h, Snapshots.hydrationBoundOf(snap).get,
+            snap.agg(max("squelch_count")).head().getLong(0))
+        }
     }
-    for ((maxH, ignore) <- Seq((12L, None), (9L, None), (3L, None), (9L, Some((5L, 9L))),
-        (10L, Some((5L, 10L))), (12L, Some((5L, 9L))), (12L, Some((7L, 11L)))))
-      assert(store.tabletSnapshotLookup("t1", maxH, ignore)
-        .map(l => l.atHeight -> l.hydrationBound) === reference(maxH, ignore), (maxH, ignore))
+    def checkAll(): Unit =
+      for ((maxH, ignore) <- Seq((12L, None), (9L, None), (3L, None), (9L, Some((5L, 9L))),
+          (10L, Some((5L, 10L))), (12L, Some((5L, 9L))), (12L, Some((7L, 11L)))))
+        assert(store.tabletSnapshotLookup("t1", maxH, ignore)
+          .map(l => (l.atHeight, l.hydrationBound, l.squelchCount)) ===
+          reference(maxH, ignore), (maxH, ignore))
+    checkAll()
+    assert(store.tabletSnapshotLookup("t1", 12L).map(_.atHeight) === Some(10L))
     // Reads through the lookup equal the generic read, ignore range or not.
     assert(tabletRows(store.readTabletAt("t1", 9L, Nil, Some((5L, 9L)))) === generic(9L))
     assert(tabletRows(store.readTabletAt("t1", 12L)) === generic(12L))
-    // Key heights: present, tombstoned at the snapshot (k1 deleted at 9),
+    // Point reads: present, tombstoned at the snapshot (k1 deleted at 9),
     // and never in any snapshot (`late` first written at 11).
-    val l10 = store.tabletSnapshotLookup("t1", 12L, primaryKey = Some("k2")).get
-    assert(l10.atHeight === 10L && l10.keyBound === 10L)
-    assert(store.tabletSnapshotLookup("t1", 12L, primaryKey = Some("k1")).get.keyBound ===
-      Long.MaxValue)
     for (pk <- Seq("k0", "k1", "k2", "late", "never"))
       assert(tabletRows(store.readTabletRowAt("t1", pk, 12L)) ===
         tabletRows(TemporalReads.readTabletRowAt(rows, "t1", pk, 12L)), pk)
@@ -285,13 +302,64 @@ class HeadReadSpec extends SparkTestBase {
       .toDF("probe_id", "tablet_id", "primary_key", "at_height")
     assert(store.asOfJoin("t1", probes).collect().toSeq ===
       TemporalReads.asOfJoin(rows, probes).collect().toSeq)
-    // One statement: for the lookup alone, and for building a whole
-    // snapshot-routed read (nothing else runs before the read executes).
-    assert(statements(store.tabletSnapshotLookup("t1", 12L, None, Some("k2")))._2 === 1)
-    assert(statements(store.readTabletAt("t1", 12L))._2 === 1)
-    assert(statements(store.readTabletRowAt("t1", "k2", 12L))._2 === 1)
+    // No statement: for the lookup alone, and for building a whole
+    // snapshot-routed read (nothing runs before the read executes).
+    assert(statements(store.tabletSnapshotLookup("t1", 12L))._2 === 0)
+    assert(statements(store.readTabletAt("t1", 12L))._2 === 0)
+    assert(statements(store.readTabletRowAt("t1", "k2", 12L))._2 === 0)
     // Squelch rides along for the incremental index build.
     assert(store.latestTabletSnapshotMeta("t1").map(m => (m._1, m._2)) ===
       Some((10L, Snapshots.squelchCount(rows, "t1", 10L))))
+    // Two collections' directories at one height are ONE snapshot: the
+    // index at 12 split across collections 1 and 2 reads as the whole.
+    snapshot(12L, 1, _ < "k2")
+    snapshot(12L, 2, _ >= "k2")
+    checkAll()
+    val l12 = store.tabletSnapshotLookup("t1", 12L).get
+    assert(l12.atHeight === 12L && l12.collections.sorted === Seq(1, 2))
+    assert(l12.rows.collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
+      Snapshots.buildTabletIndex(rows, "t1", 12L).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet)
+    assert(tabletRows(store.readTabletAt("t1", 12L)) === generic(12L))
+    for (pk <- Seq("k0", "k2", "late"))
+      assert(tabletRows(store.readTabletRowAt("t1", pk, 12L)) ===
+        tabletRows(TemporalReads.readTabletRowAt(rows, "t1", pk, 12L)), pk)
+    // A corrupted snapshot at 10 (wrong key, squelch 0) reads back as
+    // written; after reindexTablet its directory answers with the
+    // rebuilt squelch and hydration bound.
+    fs.delete(new org.apache.hadoop.fs.Path(
+      s"${store.snapshotsPath}/s-1-${md5Hex("t1")}-${"%017d".format(10L)}"), true)
+    store.writeTabletSnapshot(Seq(("zz", 0L)).toDF("primary_key", "height"), "t1", 10L, 0L, 1)
+    val corrupt = store.tabletSnapshotLookup("t1", 10L).get
+    assert((corrupt.atHeight, corrupt.hydrationBound, corrupt.squelchCount) === ((10L, 0L, 0L)))
+    assert(store.reindexTablet("t1", 10L) === Some(10L))
+    val repaired = store.tabletSnapshotLookup("t1", 10L).get
+    assert((repaired.hydrationBound, repaired.squelchCount) ===
+      ((Snapshots.hydrationBoundOf(Snapshots.buildTabletIndex(rows, "t1", 10L)).get,
+        Snapshots.squelchCount(rows, "t1", 10L))))
+    checkAll()
   }
+
+  test("a snapshot-backed diff runs one statement: no probe aggregate and " +
+    "no lookup statement before its materialization") {
+    implicit val s = spark
+    val store = new StateStore(tmpDir("diff-statements"), StateStore.ManifestCommit)
+    val muts = (0L to 12L).map(h => row(1, "t1", h, s"k${h % 4}", s"v$h", del = h == 9L))
+    store.writeBatch(muts.map(r => WriteRequest(r.height, BlockRef(s"b${r.height}", r.height),
+      Seq(r), Nil)))
+    val rows = store.tabletRows
+    store.writeTabletSnapshot(Snapshots.buildTabletIndex(rows, "t1", 8L), "t1", 8L,
+      Snapshots.squelchCount(rows, "t1", 8L), 1)
+    def diff(d: DataFrame) = d.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val (d, n) = statements(store.readTabletDiff("t1", 8L, 12L))
+    assert(diff(d) === diff(TemporalReads.readTabletDiff(rows, "t1", 8L, 12L)))
+    // The materialization is the diff's one statement: the probe bounds
+    // are known from the window (fromHeight, this tablet) and the
+    // snapshot comes from the catalog.
+    assert(n === 1)
+  }
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 }

@@ -316,8 +316,8 @@ class SnapshotsSpec extends SparkTestBase {
     assert(store.latestTabletSnapshot("t1").get._1 === 10L)
   }
 
-  test("snapshot prune falls back to the table swap when snapshots no " +
-    "longer live in per-snapshot directories (post-reindex flat layout)") {
+  test("reindexTablets keeps one directory per snapshot, and prune then " +
+    "deletes exactly the dropped snapshots' directories") {
     implicit val s = spark
     val store = new graft.store.StateStore(tmpDir("store"))
     val m = mutations
@@ -329,11 +329,27 @@ class SnapshotsSpec extends SparkTestBase {
       store.writeTabletSnapshot(Snapshots.buildTabletIndex(m, "t1", h), "t1", h,
         Snapshots.squelchCount(m, "t1", h), collection = 1)
     }
-    // A reindex swap-rewrites the whole snapshot table: per-snapshot
-    // directories are gone afterwards.
-    store.reindexTablets()
+    val sp = new org.apache.hadoop.fs.Path(store.snapshotsPath)
+    val fs = sp.getFileSystem(spark.sessionState.newHadoopConf())
+    def entries(): Set[String] = fs.listStatus(sp).map { st =>
+      assert(st.isDirectory, s"${st.getPath} is not a snapshot directory")
+      st.getPath.getName
+    }.toSet
+    val before = entries()
+    assert(before.size === 5)
+    // The reindex rebuilds every snapshot in its own directory: the same
+    // directory names, nothing flat beside them, the same contents.
+    assert(store.reindexTablets() === ((1L, 5L)))
+    assert(entries() === before)
+    (2L to 10L by 2).foreach { h =>
+      assert(store.latestTabletSnapshot("t1", h).get._2.collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet ===
+        Snapshots.buildTabletIndex(m, "t1", h).collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSet, h)
+    }
     val kept = store.pruneTabletSnapshots("t1", pruneFrequency = 2)
     assert(kept === Seq(2L, 4L, 8L, 10L))
+    assert(entries() === before.filterNot(_.endsWith("%017d".format(6L))))
     val after = store.tabletSnapshots.select("at_height").distinct()
       .collect().map(_.getLong(0)).toSet
     assert(after === Set(2L, 4L, 8L, 10L))

@@ -175,28 +175,25 @@ class StateStoreSpec extends SparkTestBase {
     implicit val s = spark
     val root = tmpDir("store")
     val store = new StateStore(root)
-    import s.implicits._
-    val idx = Seq(("a", 1L)).toDF("primary_key", "height")
-    store.writeTabletSnapshot(idx, "t1", 5L, 1L)
-    // Simulate a crash between rewriteTable's two renames: table moved
-    // aside, replacement never promoted.
+    (0L to 3L).foreach(h => store.writeBatch(Seq(req(h, ("t1", "k", s"v$h")))))
+    // Simulate a crash between rewriteTable's two renames: the checkpoint
+    // log moved aside, replacement never promoted.
     val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(store.snapshotsPath)
-    val old = new org.apache.hadoop.fs.Path(store.snapshotsPath + ".old")
+    val p = new org.apache.hadoop.fs.Path(store.checkpointsPath)
+    val old = new org.apache.hadoop.fs.Path(store.checkpointsPath + ".old")
     val fs = p.getFileSystem(conf)
     assert(fs.rename(p, old))
     // A reader mid-window performs NO filesystem mutation: were it to
     // restore `.old` here, it could race a live rewrite between its two
     // renames and clobber the writer's promote (the round-5 wart). It sees
-    // the table as absent and leaves `.old` exactly where the writer put it.
-    assert(store.tabletSnapshots.count() === 0L)
+    // the log as absent and leaves `.old` exactly where the writer put it.
+    assert(store.checkpointFresh(StateStore.GlobalCheckpointKey).isEmpty)
     assert(fs.exists(old) && !fs.exists(p))
     // Crash RECOVERY is the writer's job: reopening the store (the restart
-    // path) restores the complete old table before any write could run.
+    // path) restores the complete old log before any write could run.
     val reopened = new StateStore(root)
     assert(!fs.exists(old) && fs.exists(p))
-    assert(reopened.tabletSnapshots.count() === 1L)
-    assert(reopened.latestTabletSnapshot("t1").get._1 === 5L)
+    assert(reopened.checkpointFresh(StateStore.GlobalCheckpointKey).get.height === 3L)
   }
 
   test("in-process rewrite self-heals a prior interrupted swap before writing") {
@@ -520,7 +517,19 @@ class StateStoreSpec extends SparkTestBase {
       .collect().map(_.getString(0)).toSeq === Seq("zz"))
 
     // lowerBound scopes the rebuild to tablets >= it (reference lowerBound).
+    // Out of scope, t1's snapshot directory is not rewritten at all: the
+    // same files, not one modified.
+    val sp = new org.apache.hadoop.fs.Path(store.snapshotsPath)
+    val fs = sp.getFileSystem(spark.sessionState.newHadoopConf())
+    def t1Files() = fs.listStatus(sp)
+      .filter(_.getPath.getName.endsWith("%017d".format(3L)))
+      .flatMap(d => fs.listStatus(d.getPath))
+      .map(st => (st.getPath.toString, st.getModificationTime)).toSet
+    val t1Before = t1Files()
+    assert(t1Before.nonEmpty)
+    Thread.sleep(1100) // a rewrite would show as a later mtime, even at 1 s granularity
     assert(store.reindexTablets(lowerBound = "t2") === ((1L, 1L)))
+    assert(t1Files() === t1Before)
     assert(store.latestTabletSnapshot("t1", 3L).get._2
       .collect().map(_.getString(0)).toSeq === Seq("zz")) // untouched
     val t2Idx = store.latestTabletSnapshot("t2", 2L).get._2
