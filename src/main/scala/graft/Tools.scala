@@ -28,7 +28,7 @@ import graft.streaming.{BlockArchiveSource, IngestionPipeline}
   *   reindex <root> [maxHeight] [lowerBound] [dryRun]
   *   reindex-tablet <root> <tablet>
   *   prune <root> <tablet> <frequency>        snapshot retention prune
-  *   compact <root>                           fold per-batch dirs + checkpoint log
+  *   compact <root>                           fold per-batch dirs
   *   checkpoint <root>                        print the live global checkpoint
   *   read-tablet <root> <tablet> <height>     snapshot-aware as-of read
   *   table-generations <root>                 tablet-row table commit history
@@ -86,8 +86,8 @@ object Tools {
           s"$t: synthesized $synth sidecar(s), $present already present" }
         .mkString("\n")
     case "shard-status" :: root :: n :: Nil =>
-      new StateStore(root).verifyAllShardsWritten(n.toInt).collect()
-        .map(r => s"${r.getString(0)} height=${r.get(1)} ${r.getString(2)}")
+      new StateStore(root).verifyAllShardsWritten(n.toInt)
+        .map { case (key, h, status) => s"$key height=${h.getOrElse("null")} $status" }
         .mkString("\n")
     case "finalize-sharding" :: root :: n :: Nil =>
       val cp = new StateStore(root).finalizeSharding(n.toInt)
@@ -111,8 +111,7 @@ object Tools {
       val store = new StateStore(root)
       val t = store.compactTabletRows()
       val e = store.compactSingletEntries()
-      store.compactCheckpoints()
-      s"compacted $t tablet-row and $e singlet-entry batch dirs; checkpoint log folded"
+      s"compacted $t tablet-row and $e singlet-entry batch dirs"
     case "checkpoint" :: root :: Nil =>
       new StateStore(root).checkpoint(StateStore.GlobalCheckpointKey)
         .map(cp => s"checkpoint height=${cp.height} block=${cp.blockId}")

@@ -67,12 +67,6 @@ object Schemas {
     StructField("value", BinaryType, nullable = true),
     StructField("is_deletion", BooleanType, nullable = false)))
 
-  val checkpoints: StructType = StructType(Seq(
-    StructField("key", StringType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("block_id", StringType, nullable = false),
-    StructField("block_num", LongType, nullable = false)))
-
   val tabletSnapshots: StructType = StructType(Seq(
     StructField("collection", IntegerType, nullable = false),
     StructField("tablet_id", StringType, nullable = false),

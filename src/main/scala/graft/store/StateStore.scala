@@ -15,10 +15,12 @@ import graft.model._
   *                     by (tablet_id, height), per-file stats in the
   *                     manifest so tablet/height predicates prune files.
   *   singlet_entries/  same, for singlet entries.
-  *   checkpoints/      tiny commit log; the LAST durably-visible write of a
-  *                     batch, mirroring the reference's checkpoint-key-last
-  *                     flush ordering (store/kv/store.go:418–450). Compacted
-  *                     to latest-per-key once the file count grows.
+  *   checkpoints/      one `cp-<key>-<height>.json` file per key (the
+  *                     reference's one value under a fixed key, const.go:17);
+  *                     the LAST durably-visible write of a batch, mirroring
+  *                     the reference's checkpoint-key-last flush ordering
+  *                     (store/kv/store.go:418–450). Written, listed and read
+  *                     by the driver alone: no Spark job.
   *   tablet_snapshots/ TabletIndex log (indexing.go).
   *
   * Commit protocol — the Spark stand-in for the reference KV store's atomic
@@ -36,13 +38,12 @@ import graft.model._
   * skip, so rows are never duplicated (the reference gets the same from KV
   * overwrite semantics).
   *
-  * Staged rename is only the checkpoint log's and the snapshot table's
-  * commit: an append is written under `_staging/<uuid>` (invisible to
+  * Staged rename is only the checkpoint files' and the snapshot table's
+  * commit: a write is staged under `_staging/<uuid>` (invisible to
   * readers) and renamed into the table under a deterministic name. The
-  * snapshot table keeps one directory per snapshot, always (a reindex
-  * replaces directories one at a time); the checkpoint log's whole-table
-  * rewrite (compaction) is the crash-safe swap of [[rewriteTable]] /
-  * [[recoverSwap]].
+  * snapshot table keeps one directory per snapshot (a reindex replaces
+  * directories one at a time), and a checkpoint write deletes its key's
+  * older files after the rename, so no table is ever swap-rewritten.
   *
   * All filesystem operations go through Hadoop's FileSystem API, so the
   * store works unchanged against hdfs:// or s3a:// roots.
@@ -89,13 +90,6 @@ final class StateStore(
   // means construction happens before any in-flight stage — sweep here.
   deletePathQuiet(stagingRoot)
 
-  // Crash recovery for interrupted table swaps is a WRITER responsibility:
-  // it runs once at construction (covering a crash in a previous process)
-  // and again at the head of every [[rewriteTable]]. Readers never rename —
-  // a reader racing a live rewrite between its two renames could otherwise
-  // restore `path.old` over the writer's about-to-promote replacement.
-  recoverSwap(checkpointsPath)
-
   // ------------------------------------------------------------------
   // Filesystem plumbing (Hadoop FS — never java.io.File, which silently
   // answers "false" for any non-local root).
@@ -139,36 +133,6 @@ final class StateStore(
       renamePath(staging, target)
       true
     }
-  }
-
-  /** Swap-rewrite the whole checkpoint log (compaction, migration,
-    * shard-checkpoint removal): write the replacement, move the old table aside,
-    * promote, then delete the old copy. A crash at any point leaves a
-    * COMPLETE table either at `path` or at `path.old`; [[recoverSwap]]
-    * (run at store construction and here — never by a reader) finishes an
-    * interrupted swap. `replacement` is by-name: it is planned AFTER that
-    * recovery, so a table found moved aside is rewritten from its
-    * restored rows, not read as empty. */
-  private def rewriteTable(path: String, replacement: => DataFrame): Unit = {
-    recoverSwap(path)
-    val tmp = s"$path.rewrite"
-    deletePath(tmp)
-    replacement.write.mode(SaveMode.Overwrite).json(tmp)
-    val old = s"$path.old"
-    deletePath(old)
-    renamePath(path, old)
-    renamePath(tmp, path)
-    deletePath(old)
-  }
-
-  /** Crash recovery for [[rewriteTable]]: the table missing while the
-    * moved-aside copy exists means a rewrite died between its two renames —
-    * restore the complete old table instead of silently reading "empty".
-    * Called ONLY from construction and write paths (see the constructor
-    * note); the read path performs no filesystem mutation. */
-  private def recoverSwap(path: String): Unit = {
-    val old = s"$path.old"
-    if (!pathExists(path) && pathExists(old)) renamePath(old, path)
   }
 
   /** Read one store table. Only a missing path means "empty" — a corrupt or
@@ -227,64 +191,43 @@ final class StateStore(
     writeCheckpoint(Checkpoint(checkpointKey, head.height, head.block.id, head.block.num))
   }
 
-  /** Append a checkpoint row AND update the single-writer cache — every
+  /** Write a checkpoint AND update the single-writer cache — every
     * checkpoint write in this process must go through here (a direct
-    * file append would leave `checkpoint()` serving a stale cache).
+    * file write would leave `checkpoint()` serving a stale cache).
     *
-    * The log is JSON-lines written straight through the Hadoop FS — one
-    * tiny record per commit does not deserve a Spark job (it was ~15% of
-    * small-batch ingestion wall-clock as a 1-row parquet write). Same
-    * staged-write + atomic-rename protocol as the snapshot table, and the
-    * file name is deterministic per (key, height), so a crash replay of
-    * the same checkpoint is a no-op skip. */
+    * One tiny file per (key, height), written straight through the
+    * Hadoop FS with the snapshot table's staged-write + atomic-rename
+    * protocol; the name is deterministic, so a crash replay of the same
+    * checkpoint is a no-op skip. After the rename the key's older files
+    * are deleted. A failed delete leaves an older file, which readers
+    * ignore (they take the highest height) and the next write removes,
+    * so it never fails the commit. */
   def writeCheckpoint(cp: Checkpoint): Unit = {
     val target = s"$checkpointsPath/cp-${cp.key}-${cp.height}.json"
     if (!pathExists(target)) {
-      def q(s: String) = "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-      val json = s"""{"key":${q(cp.key)},"height":${cp.height},""" +
-        s""""block_id":${q(cp.blockId)},"block_num":${cp.blockNum}}\n"""
+      val record = CheckpointJson.createObjectNode()
+        .put("key", cp.key).put("height", cp.height)
+        .put("block_id", cp.blockId).put("block_num", cp.blockNum)
       val staging = s"$stagingRoot/${java.util.UUID.randomUUID().toString}.json"
       val (fs, sp) = fsPath(staging)
       val out = fs.create(sp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
+      try out.write(CheckpointJson.writeValueAsBytes(record)) finally out.close()
       fs.mkdirs(new Path(checkpointsPath))
       renamePath(staging, target)
     }
     cpCache.put(cp.key, cp)
-    maybeCompactCheckpoints()
+    try {
+      val (fs, _) = fsPath(checkpointsPath)
+      checkpointFiles(fs).foreach { case (key, height, p) =>
+        if (key == cp.key && height < cp.height) fs.delete(p, false)
+      }
+    } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  // Single-writer in-memory mirror of the latest checkpoint per key: the
-  // durable log is append-only and this process is the only writer (the
-  // linearity guard already assumes that), so re-reading the growing log
-  // on every batch is pure overhead (~30% of ingestion throughput).
+  // Single-writer in-memory mirror of the latest checkpoint per key: this
+  // process is the only writer (the linearity guard already assumes
+  // that), so re-reading the log on every batch is pure overhead.
   private val cpCache = scala.collection.concurrent.TrieMap.empty[String, Checkpoint]
-
-  // One directory per checkpoint write would grow without bound (the
-  // reference's KV store overwrites in place); compact the log to
-  // latest-per-key once the directory count crosses the threshold. The
-  // rewrite preserves `checkpoint()` semantics exactly (it is max-per-key).
-  private val cpWritesSinceCompactionCheck = new java.util.concurrent.atomic.AtomicLong
-  private[graft] var checkpointCompactionThreshold = 64
-
-  private def maybeCompactCheckpoints(): Unit =
-    if (cpWritesSinceCompactionCheck.incrementAndGet() % checkpointCompactionThreshold == 0) {
-      val (fs, path) = fsPath(checkpointsPath)
-      if (fs.exists(path) && fs.listStatus(path).length > checkpointCompactionThreshold)
-        compactCheckpoints()
-    }
-
-  /** Rewrite the checkpoint log to one row per key (its live value). */
-  def compactCheckpoints(): Unit =
-    rewriteTable(checkpointsPath, checkpointsDF
-      .groupBy(col("key"))
-      .agg(max_by(struct(col("height"), col("block_id"), col("block_num")), col("height")).as("w"))
-      .select(col("key"), col("w.height").as("height"),
-        col("w.block_id").as("block_id"), col("w.block_num").as("block_num"))
-      .coalesce(1))
 
   // The mutation tables. statsCols: the manifest records per-file
   // (tablet/singlet id, height, key) bounds at commit, and the point/as-of
@@ -376,56 +319,12 @@ final class StateStore(
     manifestSingletEntries.readPruned(filters)
   def tabletSnapshots: DataFrame = readTable(snapshotsPath, Schemas.tabletSnapshots)
 
-  def checkpointsDF: DataFrame = {
-    if (!pathExists(checkpointsPath))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.checkpoints)
-    else {
-      migrateLegacyCheckpointLog
-      spark.read.option("recursiveFileLookup", "true")
-        .schema(Schemas.checkpoints).json(checkpointsPath)
-    }
-  }
-
-  /** Format guard: older stores wrote the checkpoint log as per-commit
-    * PARQUET directories. JSON-parsing a parquet file in PERMISSIVE mode
-    * yields all-null rows, so `checkpoint()` would silently serve None over
-    * a populated store — and the linearity guard would then re-admit
-    * height-0 batches, duplicating data instead of failing loudly. Detect
-    * legacy parquet files once per instance and migrate them into the JSON
-    * log via the crash-safe table swap (single-writer makes this safe; a
-    * concurrent legacy READER of the same store was already impossible,
-    * since it would be running pre-JSON code). */
-  private lazy val migrateLegacyCheckpointLog: Unit = {
-    val (fs, path) = fsPath(checkpointsPath)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) files += it.next().getPath
-    val parquetFiles = files.filter(_.getName.endsWith(".parquet"))
-    if (parquetFiles.nonEmpty) {
-      val legacy = spark.read.schema(Schemas.checkpoints)
-        .parquet(parquetFiles.map(_.toString).toSeq: _*)
-      val jsonFiles = files.filter(_.getName.endsWith(".json"))
-      val existing =
-        if (jsonFiles.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.checkpoints)
-        else spark.read.schema(Schemas.checkpoints)
-          .json(jsonFiles.map(_.toString).toSeq: _*)
-      // Materializes the union to a tmp table BEFORE the swap, so the
-      // explicit source file paths above are still live while read.
-      rewriteTable(
-        checkpointsPath, existing.unionByName(legacy).coalesce(1))
-    }
-  }
-
-  /** Latest checkpoint for a key (read.go:417–437). The checkpoint log is
-    * append-only; the live checkpoint is the highest height per key.
-    * Served from the single-writer cache once warm; the durable log is the
-    * source of truth at startup. */
+  /** Latest checkpoint for a key (read.go:417–437): the key's highest
+    * height in the checkpoint log. Served from the single-writer cache
+    * once warm; the durable log is the source of truth at startup. */
   def checkpoint(key: String): Option[Checkpoint] =
     cpCache.get(key).orElse {
-      val fromLog = readCheckpointFromLog(key)
+      val fromLog = readCheckpoints(_ == key).headOption
       fromLog.foreach(cpCache.put(key, _))
       fromLog
     }
@@ -435,63 +334,53 @@ final class StateStore(
     * hit, advanced by this instance's own checkpoint writes), so on an
     * instance that never writes — a reader fleet polling another
     * process's store — [[checkpoint]] freezes at its first observation
-    * forever. One small log read per call; no cache interaction. */
+    * forever. One listing and one small file read per call; no cache
+    * interaction. */
   def checkpointFresh(key: String): Option[Checkpoint] =
-    readCheckpointFromLog(key)
+    readCheckpoints(_ == key).headOption
 
-  private def readCheckpointFromLog(key: String): Option[Checkpoint] = {
-    import spark.implicits._
-    // Bounded replan-and-retry: a READER-fleet poll scans the checkpoint
-    // log's files while the writer's compactCheckpoints may be rewriting
-    // them — a file listed at plan time can be gone at execution time
-    // (FAILED_READ_FILE.FILE_NOT_EXIST). Each retry RE-PLANS (fresh
-    // listing of the now-compacted log), so one bounce resolves it; the
-    // log's content is latest-per-key either way, so the retried answer
-    // is never stale. Persistent failures still surface loudly.
-    var attempt = 0
-    while (true) {
-      try {
-        return checkpointsDF
-          .filter(col("key") === lit(key))
-          .orderBy(col("height").desc)
-          .limit(1)
-          .select(col("key"), col("height"),
-            col("block_id").as("blockId"), col("block_num").as("blockNum"))
-          .as[Checkpoint]
-          .collect()
-          .headOption
-      } catch {
-        // Exception, not Throwable: a fatal error (OOM, linkage) must
-        // propagate immediately, never be message-inspected and slept on.
-        case e: Exception if attempt < 3 && fileVanishedUnder(e) =>
-          attempt += 1
-          Thread.sleep(50L << attempt)
+  /** `(key, height, path)` of every file in the checkpoint log. Names
+    * starting with `.` or `_` (checksums, markers) are skipped; any other
+    * entry that is not a `cp-<key>-<height>.json` file raises: a log this
+    * reader cannot parse (a parquet-era `cp-<key>-<height>/` directory, an
+    * old compaction's `part-*.json`) must never read as empty, or the
+    * linearity guard would re-admit height 0 and duplicate data. */
+  private def checkpointFiles(fs: FileSystem): Seq[(String, Long, Path)] = {
+    val listed =
+      try fs.listStatus(new Path(checkpointsPath)).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    listed.filterNot(st => Seq(".", "_").exists(st.getPath.getName.startsWith)).map { st =>
+      st.getPath.getName match {
+        case CheckpointFileName(key, h) if st.isFile => (key, h.toLong, st.getPath)
+        case _ => throw new IllegalStateException(
+          s"unrecognized entry ${st.getPath} in the checkpoint log")
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
-  /** The exception chain indicates a scanned file vanished mid-read (a
-    * concurrent log compaction/sweep) — the retriable class, distinct
-    * from corruption or genuine IO failure. Matched NARROWLY: a
-    * FileNotFoundException cause, or Spark's FAILED_READ_FILE.FILE_NOT_EXIST
-    * error class — NOT a generic "does not exist" substring, which would
-    * also match an AnalysisException for a missing table/path (a
-    * non-retriable condition that three sleep-retries would only delay). */
-  private def fileVanishedUnder(e: Throwable): Boolean = {
-    var cur: Throwable = e
-    var depth = 0
-    while (cur != null && depth < 10) {
-      cur match {
-        case _: java.io.FileNotFoundException => return true
-        case _ =>
-          if (Option(cur.getMessage).exists(_.contains("FILE_NOT_EXIST")))
-            return true
+  /** The live checkpoint of every key `keep` accepts: one listing, then
+    * the highest-height file of each such key. A file that vanishes
+    * between the listing and its open was an older file a concurrent
+    * writer removed after promoting a newer one, so the reader lists
+    * again (bounded); the newer file is then in the listing. An empty
+    * answer is confirmed by a second listing: a local-FS listing skips an
+    * entry deleted between its name scan and its stat, so one that races
+    * a writer's rename-then-delete can miss the old file and the new. */
+  private def readCheckpoints(keep: String => Boolean, attempt: Int = 0): Seq[Checkpoint] = {
+    val (fs, _) = fsPath(checkpointsPath)
+    val newest = checkpointFiles(fs).filter(f => keep(f._1))
+      .groupBy(_._1).values.map(_.maxBy(_._2)._3).toSeq
+    try {
+      val cps = newest.map { p =>
+        val in = fs.open(p)
+        val r = try CheckpointJson.readTree(in) finally in.close()
+        Checkpoint(r.required("key").asText, r.required("height").asLong,
+          r.required("block_id").asText, r.required("block_num").asLong)
       }
-      cur = cur.getCause
-      depth += 1
+      if (cps.isEmpty && attempt == 0) readCheckpoints(keep, 1) else cps
+    } catch {
+      case _: java.io.FileNotFoundException if attempt < 4 => readCheckpoints(keep, attempt + 1)
     }
-    false
   }
 
   private def tabletHashOf(tabletId: String): String =
@@ -1341,31 +1230,20 @@ final class StateStore(
   // Sharding (parallel backfill) coordination
   // ------------------------------------------------------------------
 
-  /** All shard checkpoints (read.go:439–476): prefix scan of "shard-*". */
-  def shardCheckpoints(): DataFrame =
-    checkpointsDF
-      .filter(col("key").startsWith(ShardCheckpointPrefix))
-      .groupBy(col("key"))
-      .agg(max_by(struct(col("height"), col("block_id"), col("block_num")), col("height")).as("w"))
-      .select(col("key"), col("w.height").as("height"), col("w.block_id").as("block_id"),
-        col("w.block_num").as("block_num"))
+  /** All shard checkpoints (read.go:439–476): the live "shard-*" keys. */
+  def shardCheckpoints(): Seq[Checkpoint] =
+    readCheckpoints(_.startsWith(ShardCheckpointPrefix))
 
   /** Shard-progress reconciliation (J3, write.go:82–181): classify every shard
     * against the highest shard height. Returns (key, height, status). */
-  def verifyAllShardsWritten(expectedShards: Int): DataFrame = {
-    val cps = shardCheckpoints()
-    val refHeight = cps.agg(max(col("height"))).collect().headOption.flatMap(r =>
-      Option(r.get(0)).map(_.asInstanceOf[Long]))
-    import spark.implicits._
-    val expected = (0 until expectedShards)
-      .map(i => f"$ShardCheckpointPrefix$i%03d").toDF("key")
-    expected
-      .join(cps, Seq("key"), "left")
-      .select(col("key"), col("height"),
-        when(col("height").isNull, lit("missing"))
-          .when(col("height") === lit(refHeight.getOrElse(-1L)), lit("complete"))
-          .otherwise(lit("behind")).as("status"))
-      .orderBy("key")
+  def verifyAllShardsWritten(expectedShards: Int): Seq[(String, Option[Long], String)] = {
+    val heights = shardCheckpoints().map(cp => cp.key -> cp.height).toMap
+    val refHeight = heights.values.maxOption
+    (0 until expectedShards).map { i =>
+      val key = f"$ShardCheckpointPrefix$i%03d"
+      val h = heights.get(key)
+      (key, h, if (h.isEmpty) "missing" else if (h == refHeight) "complete" else "behind")
+    }
   }
 
   /** CheckCleanDBForSharding (read.go:439–452): sharding reprocessing must
@@ -1383,26 +1261,23 @@ final class StateStore(
     * per-shard checkpoints (the live injector takes over from here).
     * Refuses if any shard is missing or behind. */
   def finalizeSharding(expectedShards: Int): Checkpoint = {
-    val statuses = verifyAllShardsWritten(expectedShards).collect()
-    val notComplete = statuses.filter(_.getString(2) != "complete")
+    val notComplete = verifyAllShardsWritten(expectedShards).filter(_._3 != "complete")
     require(
       notComplete.isEmpty,
-      s"cannot finalize sharding: ${notComplete.map(r => s"${r.getString(0)}=${r.getString(2)}").mkString(", ")}")
-    val head = shardCheckpoints()
-      .orderBy(col("height").desc).limit(1).collect().head
-    val cp = Checkpoint(
-      GlobalCheckpointKey, head.getLong(1), head.getString(2), head.getLong(3))
+      s"cannot finalize sharding: ${notComplete.map(r => s"${r._1}=${r._3}").mkString(", ")}")
+    val cp = shardCheckpoints().maxBy(_.height).copy(key = GlobalCheckpointKey)
     writeCheckpoint(cp)
     deleteAllShardCheckpoints()
     cp
   }
 
-  /** DeleteAllShardCheckpoints (write.go:196–198): compacting rewrite of the
-    * checkpoint log without the shard-* keys. */
+  /** DeleteAllShardCheckpoints (write.go:196–198): delete the `cp-shard-*`
+    * files. */
   def deleteAllShardCheckpoints(): Unit = {
-    rewriteTable(
-      checkpointsPath,
-      checkpointsDF.filter(!col("key").startsWith(ShardCheckpointPrefix)).coalesce(1))
+    val (fs, _) = fsPath(checkpointsPath)
+    checkpointFiles(fs).foreach { case (key, _, p) =>
+      if (key.startsWith(ShardCheckpointPrefix)) deletePath(p.toString)
+    }
     cpCache.keys.filter(_.startsWith(ShardCheckpointPrefix)).foreach(cpCache.remove)
   }
 }
@@ -1940,6 +1815,9 @@ object StateStore {
 
   val GlobalCheckpointKey = "checkpoint" // const.go:17
   val ShardCheckpointPrefix = "shard-"   // read.go:454–464
+  private val CheckpointFileName = """cp-(.+)-(\d{1,18})\.json""".r
+  /** Writes and parses the checkpoint files' four-field JSON record. */
+  private val CheckpointJson = new com.fasterxml.jackson.databind.ObjectMapper()
   /** Row-count analogue of the reference's 25 MB heavy-index warning
     * (indexing.go:145–148). */
   val HeavyIndexRowWarning = 1000000L

@@ -13,6 +13,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *   - a pipeline batch makes ONE driver collect (block metadata plus the
   *     reversible payloads) before its two table writes;
   *   - a merge runs its touched-key collect and its derivation only;
+  *   - checkpoint reads and sharding finalization run none: the
+  *     checkpoint log is listed, read and written on the driver;
   *
   * and every one of those jobs carries its phase label
   * (`spark.job.description`), ahead of any description the caller had set.
@@ -140,5 +142,26 @@ class CommitJobsSpec extends SparkTestBase {
     assert(report.rewritten === 1)
     assert(jobs.count(_ == "merge.touchedKeys") === 1, jobs)
     assert(batchSession.conf.get("spark.sql.adaptive.enabled") === aqe)
+  }
+
+  test("finalizeSharding, verifyAllShardsWritten and cold checkpoint reads " +
+    "launch no Spark job") {
+    implicit val s = spark
+    val store = new StateStore(tmpDir("jobs-checkpoints"))
+    Seq(0, 1).foreach(i => store.writeCheckpoint(
+      Checkpoint(f"${StateStore.ShardCheckpointPrefix}$i%03d", 9L, "blk-9", 9L)))
+    val (status, verifyJobs) = jobsOf(store.verifyAllShardsWritten(2))
+    assert(status.map(_._3) === Seq("complete", "complete"))
+    assert(verifyJobs.isEmpty, verifyJobs)
+    val (finalCp, finalizeJobs) = jobsOf(store.finalizeSharding(2))
+    assert(finalCp === Checkpoint(StateStore.GlobalCheckpointKey, 9L, "blk-9", 9L))
+    assert(finalizeJobs.isEmpty, finalizeJobs)
+    val cold = new StateStore(store.root)
+    val (cp, coldJobs) = jobsOf(cold.checkpoint(StateStore.GlobalCheckpointKey))
+    assert(cp === Some(finalCp))
+    assert(coldJobs.isEmpty, coldJobs)
+    val (fresh, freshJobs) = jobsOf(cold.checkpointFresh(StateStore.GlobalCheckpointKey))
+    assert(fresh === Some(finalCp))
+    assert(freshJobs.isEmpty, freshJobs)
   }
 }

@@ -170,44 +170,11 @@ class StateStoreSpec extends SparkTestBase {
     assert(store.tabletRows.filter(col("primary_key") === "zz").count() === 0L)
   }
 
-  test("interrupted table rewrite: READERS never rename (no race against a " +
-    "live swap); recovery happens at writer construction") {
-    implicit val s = spark
-    val root = tmpDir("store")
-    val store = new StateStore(root)
-    (0L to 3L).foreach(h => store.writeBatch(Seq(req(h, ("t1", "k", s"v$h")))))
-    // Simulate a crash between rewriteTable's two renames: the checkpoint
-    // log moved aside, replacement never promoted.
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(store.checkpointsPath)
-    val old = new org.apache.hadoop.fs.Path(store.checkpointsPath + ".old")
-    val fs = p.getFileSystem(conf)
-    assert(fs.rename(p, old))
-    // A reader mid-window performs NO filesystem mutation: were it to
-    // restore `.old` here, it could race a live rewrite between its two
-    // renames and clobber the writer's promote (the round-5 wart). It sees
-    // the log as absent and leaves `.old` exactly where the writer put it.
-    assert(store.checkpointFresh(StateStore.GlobalCheckpointKey).isEmpty)
-    assert(fs.exists(old) && !fs.exists(p))
-    // Crash RECOVERY is the writer's job: reopening the store (the restart
-    // path) restores the complete old log before any write could run.
-    val reopened = new StateStore(root)
-    assert(!fs.exists(old) && fs.exists(p))
-    assert(reopened.checkpointFresh(StateStore.GlobalCheckpointKey).get.height === 3L)
-  }
-
-  test("in-process rewrite self-heals a prior interrupted swap before writing") {
-    implicit val s = spark
-    val store = new StateStore(tmpDir("store"))
-    (0L to 3L).foreach(h => store.writeBatch(Seq(req(h, ("t1", "k", s"v$h")))))
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(store.checkpointsPath)
-    val fs = p.getFileSystem(conf)
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(store.checkpointsPath + ".old")))
-    // Checkpoint-log compaction (a write path) recovers the moved-aside
-    // log, then compacts it — no checkpoint lost.
-    store.compactCheckpoints()
-    assert(store.checkpointFresh(StateStore.GlobalCheckpointKey).get.height === 3L)
+  /** Names of the files in `store`'s checkpoint log, checksums excluded. */
+  private def checkpointFileNames(store: StateStore): Set[String] = {
+    val p = new org.apache.hadoop.fs.Path(s"${store.root}/checkpoints")
+    p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+      .map(_.getPath.getName).filterNot(_.startsWith(".")).toSet
   }
 
   test("checkpoint log compaction preserves latest-per-key and shrinks the log") {
@@ -215,22 +182,18 @@ class StateStoreSpec extends SparkTestBase {
     val store = new StateStore(tmpDir("store"))
     (0L to 9L).foreach(h => store.writeBatch(Seq(req(h, ("t1", "k", s"v$h")))))
     store.writeCheckpoint(Checkpoint("shard-000", 7L, "s7", 7L))
-    store.compactCheckpoints()
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(store.checkpointsPath)
-    // Compacted: the per-write commit directories are gone (the table is
-    // one flat coalesced file set).
-    assert(p.getFileSystem(conf).listStatus(p).count(_.isDirectory) === 0)
+    // Each write deletes its key's older files: one file per key remains.
+    assert(checkpointFileNames(store) === Set("cp-checkpoint-9.json", "cp-shard-000-7.json"))
     assert(store.checkpoint(StateStore.GlobalCheckpointKey).get.height === 9L)
     assert(store.checkpoint("shard-000").get.height === 7L)
     // A fresh store instance (cold cache) reads the same answers from disk.
     val reopened = new StateStore(store.root)
-    assert(reopened.checkpoint(StateStore.GlobalCheckpointKey).get.height === 9L)
-    assert(reopened.checkpoint("shard-000").get.height === 7L)
+    assert(reopened.checkpoint(StateStore.GlobalCheckpointKey).get ===
+      Checkpoint(StateStore.GlobalCheckpointKey, 9L, "blk-9", 9L))
+    assert(reopened.checkpoint("shard-000").get === Checkpoint("shard-000", 7L, "s7", 7L))
   }
 
-  test("legacy parquet checkpoint log is detected and migrated, not " +
-    "silently parsed as null JSON") {
+  test("legacy parquet checkpoint log raises on read, never reads as empty") {
     implicit val s = spark
     import s.implicits._
     val root = tmpDir("store")
@@ -239,15 +202,63 @@ class StateStoreSpec extends SparkTestBase {
       .toDF("key", "height", "block_id", "block_num")
       .write.parquet(s"$root/checkpoints/cp-checkpoint-41")
     val store = new StateStore(root)
-    val cp = store.checkpoint(StateStore.GlobalCheckpointKey)
-    assert(cp.get.height === 41L && cp.get.blockId === "blk-41")
-    // The guard must hold: height 42 follows, height 0 is a re-admission.
-    assert(store.isNextBlock(StateStore.GlobalCheckpointKey, 42L))
-    assert(!store.isNextBlock(StateStore.GlobalCheckpointKey, 0L))
-    // Post-migration the log is JSON: a new write and a cold reopen agree.
-    store.writeBatch(Seq(req(42, ("t1", "a", "a42"))))
-    val reopened = new StateStore(root)
-    assert(reopened.checkpoint(StateStore.GlobalCheckpointKey).get.height === 42L)
+    // Read as empty, the linearity guard would re-admit height 0 and
+    // duplicate data; the reader refuses the unknown entry instead.
+    val e = intercept[IllegalStateException] {
+      store.checkpoint(StateStore.GlobalCheckpointKey)
+    }
+    assert(e.getMessage.contains("cp-checkpoint-41"))
+    intercept[IllegalStateException] {
+      store.isNextBlock(StateStore.GlobalCheckpointKey, 0L)
+    }
+    intercept[IllegalStateException] {
+      store.checkpointFresh(StateStore.GlobalCheckpointKey)
+    }
+  }
+
+  test("a crash leftover older checkpoint file is ignored, and the next " +
+    "write removes it") {
+    implicit val s = spark
+    val store = new StateStore(tmpDir("store"))
+    (0L to 5L).foreach(h => store.writeBatch(Seq(req(h, ("t1", "k", s"v$h")))))
+    // Leave what a writer that died between its rename and its delete
+    // leaves: an older file beside the newer one. (A write deletes only
+    // its key's LOWER heights, so writing height 3 now keeps height 5.)
+    store.writeCheckpoint(Checkpoint(StateStore.GlobalCheckpointKey, 3L, "blk-3", 3L))
+    assert(checkpointFileNames(store) === Set("cp-checkpoint-3.json", "cp-checkpoint-5.json"))
+    val reopened = new StateStore(store.root)
+    assert(reopened.checkpoint(StateStore.GlobalCheckpointKey).get.height === 5L)
+    reopened.writeBatch(Seq(req(6, ("t1", "k", "v6"))))
+    assert(checkpointFileNames(reopened) === Set("cp-checkpoint-6.json"))
+    assert(new StateStore(store.root).checkpointFresh(StateStore.GlobalCheckpointKey)
+      .get.height === 6L)
+  }
+
+  test("a reader polling checkpointFresh beside a writer never fails and " +
+    "never sees the height go down") {
+    implicit val s = spark
+    val store = new StateStore(tmpDir("store"))
+    val reader = new StateStore(store.root)
+    val key = StateStore.GlobalCheckpointKey
+    val last = 199L
+    store.writeCheckpoint(Checkpoint(key, 0L, "blk-0", 0L))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val error = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val poller = new Thread(() =>
+      try while (!done.get()) seen.add(reader.checkpointFresh(key).fold(-1L)(_.height))
+      catch { case t: Throwable => error.set(t) })
+    poller.start()
+    (1L to last).foreach(h => store.writeCheckpoint(Checkpoint(key, h, s"blk-$h", h)))
+    done.set(true)
+    poller.join(60000)
+    assert(error.get() === null, s"the polling reader raised: ${error.get()}")
+    import scala.jdk.CollectionConverters._
+    val heights = seen.asScala.toSeq
+    assert(heights.nonEmpty && !heights.contains(-1L))
+    assert(heights.sliding(2).forall { case Seq(a, b) => a <= b; case _ => true },
+      "the polled height went down")
+    assert(reader.checkpointFresh(key).get.height === last)
   }
 
   test("orphaned staging directories are swept on store construction") {
@@ -580,12 +591,12 @@ class StateStoreSpec extends SparkTestBase {
     val store = new StateStore(tmpDir("store"))
     (0 until n).foreach(i => Backfill.injectShard(spark, shardPath, i, store))
     assert(store.tabletRows.count() === 40L)
-    val progress = store.verifyAllShardsWritten(n).collect()
+    val progress = store.verifyAllShardsWritten(n)
     assert(progress.length === n)
-    assert(progress.forall(_.getString(2) != "missing"))
+    assert(progress.forall(_._3 != "missing"))
     // A shard that never ran reports missing.
-    val progress5 = store.verifyAllShardsWritten(n + 1).collect()
-    assert(progress5.count(_.getString(2) == "missing") === 1)
+    val progress5 = store.verifyAllShardsWritten(n + 1)
+    assert(progress5.count(_._3 == "missing") === 1)
 
     // Finalization refuses while a shard is missing…
     intercept[IllegalArgumentException] { store.finalizeSharding(n + 1) }
@@ -598,7 +609,7 @@ class StateStoreSpec extends SparkTestBase {
     // at the sharding→live handoff depends on it.
     assert(finalCp.blockId === "blk-39" && finalCp.blockNum === 39L)
     assert(store.checkpoint(StateStore.GlobalCheckpointKey).get.height === 39L)
-    assert(store.shardCheckpoints().count() === 0L)
+    assert(store.shardCheckpoints().isEmpty)
     // A cold-cache reopen agrees the shard checkpoints are gone from disk.
     val reopened = new StateStore(store.root)
     assert(reopened.checkpoint("shard-000").isEmpty)
